@@ -283,50 +283,6 @@ def hashed_bow_dense(
     )
 
 
-def train_hashed_classifier(
-    docs: DataFrame,
-    label: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_features: int = 64,
-    salt: str = "bow-v1",
-    include_bigrams: bool = False,
-    n_iter: int = 30,
-    lr: float = 1.0,
-) -> tuple[list[float], float]:
-    """fastText-style trained text filter: hashed BOW features ->
-    full-batch logistic regression (train_logreg above — one fused
-    partial-agg gradient pass per iteration, weights driver-resident).
-    Returns (weights, bias) for ``score_hashed_bow``.
-
-    The feature frame is persisted for the training loop (n_iter
-    aggregate passes would otherwise re-run the explode+groupBy each
-    iteration) and unpersisted in a finally (the round-8 BPE ADVICE
-    rule). Labels ride through the feature build keyed by id, so the
-    non-null precondition of train_logreg holds by construction:
-    every doc has a dense vector and its own label."""
-    feat_cols = [f"f_{j}" for j in range(n_features)]
-    dense = hashed_bow_dense(
-        docs.select(id_col, text_col),
-        text_col, id_col, n_features, salt, include_bigrams,
-    )
-    labeled = (
-        docs.select(F.col(id_col), label.cast("double").alias("_y"))
-        .join(dense, id_col)
-        .select(
-            "_y",
-            *[F.col("features")[j].alias(c)
-              for j, c in enumerate(feat_cols)],
-        )
-        .persist()
-    )
-    try:
-        return train_logreg(labeled, feat_cols, "_y",
-                            n_iter=n_iter, lr=lr)
-    finally:
-        labeled.unpersist()
-
-
 def score_hashed_bow(
     docs: DataFrame,
     w: list[float],

@@ -40,7 +40,7 @@ rides a later gate per the CHANGELOG landing plan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from formula1_data_pipeline_spark.operators.similarity import (
@@ -200,23 +200,6 @@ def _kcenter_incremental(base: DataFrame, k: int):
             state.unpersist()
         else:
             _release_local_checkpoint(state)
-
-
-def kcenter_select(
-    spark: SparkSession,
-    emb: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The gateable frame: (rank, vec_id, min_dist) for the greedy
-    k-center selection — exact integers + 6-dp-rounded doubles, so
-    the full trace value-hash-gates."""
-    centers = kcenter_centers(emb, k, id_col, vec_col)
-    return spark.createDataFrame(
-        [(r, i, d) for r, i, d, _ in centers],
-        schema=f"rank int, {id_col} long, min_dist double",
-    )
 
 
 def kcenter_assign(

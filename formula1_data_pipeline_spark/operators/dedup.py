@@ -699,22 +699,6 @@ def _attach_toks(pairs: DataFrame, toks: DataFrame) -> DataFrame:
     return _attach_pair_payload(pairs, toks, "toks")
 
 
-def _jaccard(a: str, b: str):
-    """|A∩B| / (|A|+|B|−|A∩B|) — one array op per pair instead of two
-    (array_intersect/array_union evaluate interpreted, so halving the
-    array work ~halves verify cost); divisor is integer-identical to
-    size(array_union), so oracle SQL using len(union) matches exactly.
-
-    Column form — composable, but the intersect subtree appears twice
-    (numerator + denominator) and a downstream threshold filter gets
-    alias-substituted through the projection, re-evaluating it again.
-    For bulk pair verification use ``jaccard_verified`` below, which
-    pins exactly one intersect per pair behind a generator barrier.
-    """
-    i = F.size(F.array_intersect(a, b))
-    return (i.cast("double") / (F.size(a) + F.size(b) - i)).alias("jaccard")
-
-
 def jaccard_verified(attached: DataFrame,
                      threshold: float | None = None) -> DataFrame:
     """(a_id, b_id, jaccard) from a pair stream with attached

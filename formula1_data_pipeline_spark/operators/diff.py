@@ -133,10 +133,3 @@ def dataset_diff(
             "old_hash", "new_hash",
         )
     )
-
-
-def diff_summary(diff: DataFrame) -> DataFrame:
-    """(status, n) counts over a ``dataset_diff`` report — the
-    one-line health check a pipeline alerts on."""
-    return (diff.groupBy("status")
-            .agg(F.count("*").cast("long").alias("n")))

@@ -276,12 +276,11 @@ def rp_topk(
     (test-pinned); on near-isotropic data the margins sit below eps
     and n_candidates must grow accordingly (measured curve in
     tests/test_dimred.py)."""
-    from pyspark.sql import Window
-
     from formula1_data_pipeline_spark.operators.similarity import (
         _as_double,
         cosine_from_norms,
         norm,
+        rank_topk,
     )
 
     # norms precomputed per VECTOR (projected and original) — never
@@ -304,9 +303,7 @@ def rp_topk(
         F.col("_proj").alias("q_proj"),
     ).withColumn("q_pnorm", norm(F.col("q_proj")))
 
-    w_cand = Window.partitionBy("q_id").orderBy(
-        F.col("proj_cos").desc(), F.col("n_id").asc())
-    cand = (
+    cand = rank_topk(
         cp.join(F.broadcast(qp), F.col("q_id") != F.col("n_id"))
         .select(
             "q_id", "n_id",
@@ -315,11 +312,9 @@ def rp_topk(
                                   F.col("q_pnorm"), F.col("n_pnorm")),
                 round_dp,
             ).alias("proj_cos"),
-        )
-        .withColumn("cand_rank", F.row_number().over(w_cand))
-        .filter(F.col("cand_rank") <= n_candidates)
-        .select("q_id", "n_id")
-    )
+        ),
+        n_candidates, "proj_cos",
+    ).select("q_id", "n_id")
     cf = corpus.select(
         F.col(id_col).alias("n_id"),
         _as_double(F.col(vec_col)).alias("n_vec"),
@@ -328,9 +323,7 @@ def rp_topk(
         F.col(id_col).alias("q_id"),
         _as_double(F.col(vec_col)).alias("q_vec"),
     ).withColumn("q_norm", norm(F.col("q_vec")))
-    w_final = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("n_id").asc())
-    return (
+    return rank_topk(
         cf.join(F.broadcast(cand), "n_id")
         .join(F.broadcast(qf), "q_id")
         .select(
@@ -340,9 +333,8 @@ def rp_topk(
                                   F.col("q_norm"), F.col("n_norm")),
                 round_dp,
             ).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= top_k)
+        ),
+        top_k, "cos_sim",
     )
 
 

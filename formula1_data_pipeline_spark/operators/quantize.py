@@ -13,7 +13,7 @@ trained quantizers bound): the scale vector is a per-dimension
 ``max(abs(v_i))`` — an order-free exact SELECTION of an input value,
 not a float sum — and encode is ``round(v_i * 127 / s_i)`` on
 identically-constructed IEEE operands, so both engines produce
-bit-identical codes. Compare ``similarity.py``'s trained Lloyd/PQ
+bit-identical codes. Compare ``similarity.py``'s trained Lloyd
 path (bounds-gated); this is the untrained exact twin.
 
 Scale shape: ONE d-column aggregate pass for the scales (map-side

@@ -143,67 +143,3 @@ def export_epoch_shards(
         spark, ranked, table, key="shard",
         stats_cols=["epoch_rank"],
     )
-
-
-def shard_integrity_manifest(
-    ranked: DataFrame,
-    id_col: str = "doc_id",
-    salt: str = "shardfp-v1",
-) -> DataFrame:
-    """Per-shard integrity record of an epoch-shuffled frame (round
-    14, pre-staged): the verification a trainer — or a cross-site
-    copy of a 100 TB shard export — runs before consuming the data.
-    ``ranked`` is ``epoch_shuffle`` output (or ``read_table`` of an
-    ``export_epoch_shards`` table); returns one row per shard:
-
-    - ``n_rows`` — shard cardinality (every shard but the last must
-      equal ``rows_per_shard``; the consumer's data-loader contract);
-    - ``rank_min`` / ``rank_max`` — the rank slice actually present;
-    - ``contiguous`` — ``rank_max - rank_min + 1 == n_rows`` AND the
-      slice starts where the shard's contract says it must: a
-      dropped, duplicated, or mis-sliced row flips it;
-    - ``content_fp`` — order-free 60-bit XOR of the salted md5 of
-      each row's ``id|epoch_rank`` pair: byte-for-byte shard
-      equality without trusting row order or file layout (the
-      streaming scaffold's ``content_fingerprint`` discipline as a
-      per-shard aggregate). XOR is commutative/associative, so the
-      fingerprint is partitioning-free and shard manifests MERGE —
-      a resumed verification can fold per-file partial manifests.
-
-    Everything is exact integer/md5 arithmetic on identically
-    constructed operands (the q38 hashing discipline), so the whole
-    manifest value-hash gates. Scale shape: one map-side partial
-    aggregate per shard key — no window, no extra shuffle beyond the
-    shard-keyed exchange; at 100 TB this is the cheapest full-scan
-    pass there is, and the per-file partials mean an object-store
-    copy can verify shard-by-shard as files land."""
-    from formula1_data_pipeline_spark.operators.sampling import (
-        md5_hash60,
-    )
-
-    row_fp = md5_hash60(
-        F.concat_ws("|", F.col(id_col).cast("string"),
-                    F.col("epoch_rank").cast("string")),
-        salt,
-    )
-    return (
-        ranked.groupBy("shard")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("epoch_rank").alias("rank_min"),
-            F.max("epoch_rank").alias("rank_max"),
-            F.bit_xor(row_fp).alias("content_fp"),
-            F.min("row_in_shard").alias("_rmin"),
-            F.max("row_in_shard").alias("_rmax"),
-        )
-        .select(
-            "shard", "n_rows", "rank_min", "rank_max",
-            (
-                (F.col("rank_max") - F.col("rank_min") + 1
-                 == F.col("n_rows"))
-                & (F.col("_rmin") == 0)
-                & (F.col("_rmax") == F.col("n_rows") - 1)
-            ).alias("contiguous"),
-            "content_fp",
-        )
-    )

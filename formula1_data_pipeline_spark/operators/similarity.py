@@ -9,6 +9,10 @@
   = same-bucket pairs, exact cosine on candidates only. At 100 TB the
   corpus shuffles once on bucket keys instead of cross-joining.
 
+Every top-k kind here and in ``vecindex``/``dimred`` ends in the same
+exact ranking step, ``rank_topk``; they differ only in how candidates
+are generated.
+
 Embeddings are ``array<float>``; all math is widened to double first
 (float kernels lose determinism across engines).
 """
@@ -17,7 +21,7 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -95,15 +99,22 @@ def cosine_topk(
         F.round(F.col("cos_raw"), round_dp) if round_dp is not None
         else F.col("cos_raw")
     )
-    from pyspark.sql import Window
+    return rank_topk(
+        scored.select("q_id", "n_id", score.alias("cos_sim")), k, "cos_sim")
 
+
+def rank_topk(scored: DataFrame, k: int, score: str) -> DataFrame:
+    """The exact top-k step every ANN kind ends in: per ``q_id``,
+    ``row_number`` over ``score`` desc with the ``n_id`` asc
+    tiebreak, kept where ``rank`` <= k. Candidate generation (all
+    pairs, LSH buckets, IVF cells, projected cosine) is what differs
+    between the kinds; this ranking policy is shared, so their outputs
+    stay row-comparable and oracle-replayable."""
     w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("n_id").asc()
+        F.col(score).desc(), F.col("n_id").asc()
     )
-    return (
-        scored.select("q_id", "n_id", score.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
     )
 
 
@@ -361,14 +372,7 @@ def ann_lsh_topk(
         )
         .distinct()
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("n_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, k, "cos_sim")
 
 
 def _ivf_assign(base: DataFrame, coefs: DataFrame, n_best: int,
@@ -384,8 +388,6 @@ def _ivf_assign(base: DataFrame, coefs: DataFrame, n_best: int,
     ``with_rank`` keeps the closeness rank (1 = primary cell) so
     consumers that soft-assign can still report one primary cell per
     vector without a second scoring pass."""
-    from pyspark.sql import Window
-
     ex = base.select("id", F.posexplode("vec").alias("d", "val"))
     scores = (
         ex.join(F.broadcast(coefs), "d")
@@ -423,8 +425,6 @@ def _hash_sample_coefs(base: DataFrame, n_centroids: int) -> DataFrame:
     order, not first-n ids). ``train_ivf_centroids`` refines it with
     Lloyd iterations; any (cluster, cnorm, d, coef) table plugs into
     the same consumers."""
-    from pyspark.sql import Window
-
     hrank = [F.md5(F.col("id").cast("string")), F.col("id")]
     cent = (
         base.orderBy(*hrank).limit(n_centroids)
@@ -462,7 +462,8 @@ def train_ivf_centroids(
     stays quantizer-sized — so the lazy plan never deepens with
     iterations. Clusters that lose every member carry their previous
     centroid forward (no vanishing cells). n_iter is a fixed bound,
-    not a convergence loop.
+    not a convergence loop. A non-NULL vector whose length differs
+    from the centroids' raises in the first round's assignment.
 
     Determinism: mean aggregation is IEEE-double and partial-sum
     order depends on partitioning, so trained centroids can differ in
@@ -551,10 +552,20 @@ def train_ivf_centroids(
             structs.append(
                 f"named_struct('s', {score}, 'nc', {-c})")
         argmax = f"(-array_max(array({', '.join(structs)})).nc)"
+        # a vector of another length would be NULL-padded by zip_with,
+        # score -Infinity everywhere and land in cluster 0 unnoticed —
+        # fail inside the same projection instead (no extra job); a
+        # NULL vector keeps its NULL-score path and never reaches a mean
+        cluster = (
+            f"CASE WHEN vec IS NOT NULL AND size(vec) != {dim} THEN "
+            f"raise_error(concat('train_ivf_centroids: vector ', "
+            f"CAST(id AS STRING), ' has length ', "
+            f"CAST(size(vec) AS STRING), ', centroids have dim {dim}')) "
+            f"ELSE {argmax} END")
         # the old join-back dropped NULL-id rows from the means; the
         # projection form must exclude them the same way
         assigned = base.filter(F.col("id").isNotNull()).selectExpr(
-            f"{argmax} AS cluster", "vec")
+            f"{cluster} AS cluster", "vec")
         means = assigned.groupBy("cluster").agg(
             *[F.avg(F.col("vec")[d]).alias(f"_m{d}")
               for d in range(dim)])
@@ -614,8 +625,6 @@ def ivf_flat_topk(
     quantizer table (``train_ivf_centroids``, or any offline k-means)
     — replaces the hash-sample init; ``n_centroids`` is then ignored.
     """
-    from pyspark.sql import Window
-
     base_c = corpus.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
     ).withColumn("nrm", norm(F.col("vec")))
@@ -645,12 +654,7 @@ def ivf_flat_topk(
         # a multi-assigned corpus vector can meet the same query in
         # several probed lists; identical rows, deduped before ranking
         scored = scored.distinct()
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("n_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, k, "cos_sim")
 
 
 def embedding_neardup_pairs(
@@ -697,80 +701,6 @@ def embedding_neardup_pairs(
             .alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
-    )
-
-
-def semantic_contamination(
-    corpus: DataFrame,
-    bench: DataFrame,
-    dim: int,
-    threshold: float = 0.9,
-    n_tables: int = 16,
-    n_planes: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bench_id_col: str = "bench_id",
-    bench_vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-space benchmark decontamination — the FOURTH
-    contamination tier beside q66's exact-shingle membership, Bloom
-    prefilter, and token-level MinHash fuzzy matching: a corpus item
-    whose EMBEDDING sits within cosine ``threshold`` of a benchmark
-    item's is flagged, catching semantically-equivalent rephrasings
-    that share too few tokens for the lexical tiers (translations,
-    heavy paraphrases — the contamination mode eval-integrity work
-    worries about most).
-
-    Per-corpus-vector report (every corpus row appears — the
-    fuzzy_contamination output shape): (vec_id,
-    n_semantic_matches, max_semantic_cos, semantic_contaminated).
-
-    Scale shape (the ann_lsh_topk candidate discipline pointed
-    across corpora): both sides bucket through the deterministic
-    md5-derived multi-table hyperplanes; the BENCHMARK side is
-    eval-set-small and broadcasts, so the corpus never shuffles for
-    candidate generation; exact 6-dp cosine verifies candidates
-    only, multi-table duplicate hits dedup AFTER scoring (cosine is
-    deterministic, duplicates are bit-identical). Fully untrained —
-    every bucket bit and cosine replays cross-engine, so gate rows
-    carry the FULL value hash (unlike the trained q89/q96 tier).
-    Multi-table is the recall lever: a near-threshold pair missed by
-    one 5-bit sketch has 16 chances (1-(1-q^5)^16).
-    """
-    b = _lsh_bucketed_arrow(
-        bench.select(F.col(bench_id_col).alias("id"),
-                     F.col(bench_vec_col).alias("vec")),
-        dim, n_tables, n_planes, "id", "vec", "b_")
-    c = _lsh_bucketed_arrow(corpus, dim, n_tables, n_planes,
-                            id_col, vec_col, "n_")
-    hits = (
-        c.join(F.broadcast(b), "bucket")
-        .select(
-            "n_id", "b_id",
-            F.round(
-                cosine_from_norms(F.col("n_vec"), F.col("b_vec"),
-                                  F.col("n_norm"), F.col("b_norm")),
-                6).alias("cos_sim"),
-        )
-        .distinct()
-        .filter(F.col("cos_sim") >= threshold)
-        .groupBy("n_id")
-        .agg(
-            F.countDistinct("b_id").alias("n_semantic_matches"),
-            F.max("cos_sim").alias("max_semantic_cos"),
-        )
-    )
-    return (
-        corpus.select(F.col(id_col))
-        .join(hits.withColumnRenamed("n_id", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_semantic_matches", F.lit(0))
-            .alias("n_semantic_matches"),
-            "max_semantic_cos",
-            (F.coalesce("n_semantic_matches", F.lit(0)) > 0)
-            .alias("semantic_contaminated"),
-        )
     )
 
 
@@ -898,91 +828,3 @@ def semantic_dedup(
     )
     return verdicts.unionByName(unassignable)
 
-
-def cluster_balanced_resample(
-    corpus: DataFrame,
-    dim: int,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_coefs: DataFrame | None = None,
-    salt: str = "clusterbal-v1",
-) -> DataFrame:
-    """Semantic-cluster-balanced resampling (round 14, pre-staged):
-    q68's temperature-0.5 mixture reweighting applied to SEMANTIC
-    clusters instead of metadata. Assign every embedding to its
-    primary centroid cell (the q89/q34 quantizer — deterministic md5
-    hash-sample init, or a trained ``centroid_coefs`` table), compute
-    per-cluster keep rates ``sqrt(n_min / n_cluster)``, and keep each
-    doc by its salted md5 micro-bucket — so sampled cluster sizes
-    scale as sqrt(n_cluster): the web-duplicate topics shrink, the
-    rare topics survive. This is the cluster-balancing step
-    web-scale curation runs where no domain/language label exists
-    (topic skew is a property of the EMBEDDING space, not the
-    metadata), complementing q68 (label mixture), q89 (within-cell
-    near-dup pruning) and q27 (diversity downsample).
-
-    Returns exactly one row per input doc: (``id_col``, cluster,
-    n_docs, keep_rate, kept). NULL/empty embeddings can't be
-    balanced (no defined cell), so they pass through LOUDLY as
-    ``cluster = -1, n_docs/keep_rate NULL, kept = true`` — the
-    semantic_dedup convention: a vanished verdict row is
-    indistinguishable from "dropped" downstream.
-
-    Determinism (the q68 rules, so the whole output value-hash
-    gates when the quantizer is the untrained hash-sample):
-    temperature is FIXED at 0.5 because ``sqrt`` is IEEE
-    correctly-rounded in both engines while ``pow`` is not; the keep
-    threshold is an exact integer compare of the md5 micro-bucket
-    against ``floor(rate * 1e6)``; membership is a pure function of
-    the doc id. With a TRAINED quantizer the assignment itself is
-    trained floats — bounds-gate it (the q92 rule).
-
-    Scale shape: centroid table broadcasts (offline k-means at
-    scale, ~sqrt(N) cells); assignment is one explode +
-    broadcast-join + per-(id, cluster) SUM (map-side + one skinny
-    shuffle — ``_ivf_assign``); cluster counts are a
-    centroid-cardinality aggregate that broadcasts back over a
-    narrow scan. No corpus-sized shuffle anywhere, no pairwise work
-    at all (unlike q89's within-cell verify)."""
-    from formula1_data_pipeline_spark.operators.sampling import (
-        hash_bucket,
-    )
-
-    raw = corpus.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
-    )
-    degenerate = F.col("vec").isNull() | (F.size("vec") == 0)
-    base = raw.filter(~degenerate).withColumn("nrm", norm(F.col("vec")))
-    coefs = (
-        centroid_coefs if centroid_coefs is not None
-        else _hash_sample_coefs(base, n_centroids)
-    )
-    assigned = _ivf_assign(base, coefs, 1, "").select("id", "cluster")
-    counts = assigned.groupBy("cluster").agg(
-        F.count("*").alias("n_docs"))
-    n_min = counts.agg(F.min("n_docs").alias("n_min"))
-    rates = counts.crossJoin(F.broadcast(n_min)).select(
-        "cluster", "n_docs",
-        F.sqrt(F.col("n_min").cast("double") / F.col("n_docs"))
-        .alias("rate"),
-    )
-    bucket = hash_bucket(F.col("id"), salt, n_buckets=1_000_000)
-    balanced = (
-        assigned.join(F.broadcast(rates), "cluster")
-        .select(
-            "id", "cluster", "n_docs",
-            F.round("rate", 6).alias("keep_rate"),
-            (bucket < F.floor(F.col("rate") * 1_000_000)).alias("kept"),
-        )
-    )
-    unassignable = raw.filter(degenerate).select(
-        "id", F.lit(-1).alias("cluster"),
-        F.lit(None).cast("long").alias("n_docs"),
-        F.lit(None).cast("double").alias("keep_rate"),
-        F.lit(True).alias("kept"),
-    )
-    return balanced.unionByName(unassignable).select(
-        F.col("id").alias(id_col), "cluster", "n_docs", "keep_rate",
-        "kept",
-    )

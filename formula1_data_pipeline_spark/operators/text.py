@@ -298,17 +298,6 @@ def winnow_select(shingled, w: int = WINNOW_W):
     )
 
 
-def winnow_fingerprints_df(docs, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           k: int = SHINGLE_K, w: int = WINNOW_W):
-    """(id, pos, fp_hash) per selected winnowing fingerprint — the
-    bulk/scale shape of ``winnow_encoded``: the shared shingle-hex
-    substrate + the windowed selection, one exchange total."""
-    return winnow_select(
-        winnow_shingle_hexes(docs, text_col, id_col, k), w
-    )
-
-
 def quality_score(text: Column) -> Column:
     """Deterministic 0-1 quality heuristic: length band + lexical
     diversity + token-volume saturation (the standard cheap pre-filter

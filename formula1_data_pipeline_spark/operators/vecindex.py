@@ -40,19 +40,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from formula1_data_pipeline_spark.operators.similarity import (
     _as_double,
     _ivf_assign,
     cosine_from_norms,
     norm,
+    rank_topk,
     train_ivf_centroids,
 )
 
 _CENTROIDS, _LISTS, _META = "centroids", "lists", "meta"
 _IDBLOOM = "idbloom"
-_PQBOOKS = "pqbooks"
 
 #: landed-id Bloom sidecar sizing (round-12 verdict item #2): by
 #: default ivf_index_build AUTO-SIZES the filter to the next power of
@@ -97,8 +96,7 @@ _HITS_INLIST_MAX = 10_000
 
 def _tables(index_dir: str) -> dict[str, str]:
     return {n: f"{index_dir}/{n}"
-            for n in (_CENTROIDS, _LISTS, _META, _IDBLOOM,
-                      _PQBOOKS)}
+            for n in (_CENTROIDS, _LISTS, _META, _IDBLOOM)}
 
 
 def _id_hash(col):
@@ -328,59 +326,6 @@ def _assign_rows(emb: DataFrame, coefs: DataFrame, n_assign: int,
     )
 
 
-def _pqbooks_df(spark, books: list[list[list[float]]]) -> DataFrame:
-    """(j, c, t, coef) rows for the landed PQ codebook table — tiny
-    (m x k x sub), exactly reconstructible."""
-    rows = [
-        (j, c, t, float(x))
-        for j, book in enumerate(books)
-        for c, cent in enumerate(book)
-        for t, x in enumerate(cent)
-    ]
-    return spark.createDataFrame(
-        rows, "j int, c int, t int, coef double")
-
-
-def _landed_pq_codebooks(spark, index_dir: str):
-    """Reconstruct the landed codebooks, or None for an index built
-    without PQ codes."""
-    from formula1_data_pipeline_spark.sources.txn import (
-        is_txn_table,
-        read_table,
-    )
-
-    table = _tables(index_dir)[_PQBOOKS]
-    if not is_txn_table(spark, table):
-        return None
-    cells: dict[tuple[int, int], dict[int, float]] = {}
-    for r in read_table(spark, table).collect():
-        cells.setdefault((r["j"], r["c"]), {})[r["t"]] = r["coef"]
-    m = 1 + max(j for j, _ in cells)
-    k = 1 + max(c for _, c in cells)
-    return [
-        [[cells[(j, c)][t] for t in sorted(cells[(j, c)])]
-         for c in range(k)]
-        for j in range(m)
-    ]
-
-
-def _with_pq_codes(rows: DataFrame,
-                   books: list[list[list[float]]]) -> DataFrame:
-    """Append the ``pq`` code column to (cluster, id, vec, nrm) list
-    rows — encoded over the UNIT vector (the codebooks' training
-    space; see pq.py's cosine-metric reduction)."""
-    from formula1_data_pipeline_spark.operators.pq import (
-        _unit,
-        pq_encode,
-    )
-
-    return (
-        rows.withColumn("_u", _unit(F.col("vec")))
-        .transform(lambda d: pq_encode(d, "_u", books, out_col="pq"))
-        .drop("_u")
-    )
-
-
 def ivf_index_build(
     spark,
     emb: DataFrame,
@@ -392,21 +337,11 @@ def ivf_index_build(
     vec_col: str = "embedding",
     centroid_coefs: DataFrame | None = None,
     bloom_bits: int | None = None,
-    pq_codebooks: list[list[list[float]]] | None = None,
 ) -> None:
     """Train (or accept) the quantizer and land the full index
     atomically: centroids via txn_overwrite, inverted lists via
     txn_overwrite partitioned by cluster. A rebuild supersedes
-    everything (auto_vacuum reclaims the old generation).
-
-    ``pq_codebooks`` (round 13, the IVF-PQ composition): when given
-    (``operators/pq.py::train_pq_codebooks`` output), every list row
-    also carries the vector's m-int PQ code and the codebooks land
-    beside the index, so ``ivf_index_pq_topk`` can candidate-score
-    probed cells reading ONLY the code column (32x less IO at
-    d=64/m=8) — the faiss IVFPQ layout. ``None`` (the default, and
-    every pre-r13 index) changes nothing: the list schema, every
-    gated path, and ``ivf_index_topk`` are untouched."""
+    everything (auto_vacuum reclaims the old generation)."""
     from formula1_data_pipeline_spark.sources.txn import txn_overwrite
 
     _require_integral_id(emb, id_col, "ivf_index_build")
@@ -424,13 +359,6 @@ def ivf_index_build(
     landed = _read_centroids(spark, index_dir)
     rows = _assign_rows(emb.filter(F.col(id_col).isNotNull()), landed,
                         n_assign, id_col, vec_col)
-    if pq_codebooks is not None:
-        # codebooks land BEFORE the lists that carry their codes
-        # (meta-last still seals the whole build); appends re-read
-        # the LANDED books so codes stay frozen-codebook-consistent
-        txn_overwrite(spark, _pqbooks_df(spark, pq_codebooks),
-                      t[_PQBOOKS], auto_vacuum=True)
-        rows = _with_pq_codes(rows, pq_codebooks)
     # id stats in the manifest let appends prune the landed-id skip
     # to segments whose [min, max] id range can intersect the batch —
     # without them the skip's anti-join scans every landed segment,
@@ -618,13 +546,7 @@ def ivf_index_append(
         ).select(F.col("id").cast("long").alias(id_col)).distinct()
         new = new.join(landed_ids, id_col, "left_anti")
     rows = _assign_rows(new, _read_centroids(spark, index_dir),
-                        n_assign, id_col, vec_col)
-    landed_books = _landed_pq_codebooks(spark, index_dir)
-    if landed_books is not None:
-        # a PQ-coded index: appended rows encode against the FROZEN
-        # landed codebooks, so codes stay build-consistent
-        rows = _with_pq_codes(rows, landed_books)
-    rows = rows.persist()
+                        n_assign, id_col, vec_col).persist()
     try:
         n = rows.select("id").distinct().count()
         if n:
@@ -697,131 +619,5 @@ def ivf_index_topk(
         )
         .distinct()  # multi-assigned rows can meet a query twice
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("n_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, k, "cos_sim")
 
-
-def ivf_index_pq_topk(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    n_candidates: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-``k`` per query from a PQ-coded landed index — the IVFPQ
-    composition (the 100 TB ANN read path): probe the ``n_probe``
-    closest cells, ADC-score their rows reading ONLY the
-    (cluster, id, pq) columns (parquet column pruning skips the
-    float vectors — 32x less candidate-stage IO at d=64/m=8, m table
-    lookups instead of d-mult dots per row), take the per-query ADC
-    top-``n_candidates``, then exact-cosine re-rank those candidates
-    only with their vectors re-fetched through a broadcast semi-join
-    on the SAME probed cells. Output schema and tiebreaks match
-    ``ivf_index_topk``/``cosine_topk``; with ``n_candidates`` >= the
-    probed-cell population it returns exactly ``ivf_index_topk``'s
-    rows (the lossless-machinery contract, test-pinned). Requires an
-    index built with ``pq_codebooks=`` — raises loudly otherwise."""
-    from formula1_data_pipeline_spark.operators.pq import _luts
-    from formula1_data_pipeline_spark.sources.txn import read_table
-
-    _check_consistent(spark, index_dir)
-    books = _landed_pq_codebooks(spark, index_dir)
-    if books is None:
-        raise ValueError(
-            "ivf_index_pq_topk: index has no PQ codes — rebuild with "
-            "ivf_index_build(pq_codebooks=...) or query via "
-            "ivf_index_topk")
-    sub = len(books[0][0])
-    coefs = _read_centroids(spark, index_dir)
-    base_q = queries.select(
-        F.col(id_col).alias("id"),
-        _as_double(F.col(vec_col)).alias("vec"),
-    ).filter(
-        # NULL embeddings sit out, matching pq_adc_topk — without
-        # this _luts raises a bare TypeError driver-side
-        F.col("vec").isNotNull()
-    ).withColumn("nrm", norm(F.col("vec")))
-    q = _ivf_assign(base_q, coefs, n_probe, "q_")
-    probed = [r["cluster"]
-              for r in q.select("cluster").distinct().collect()]
-    # per-query LUTs driver-side (queries are broadcast-small), keyed
-    # to the probed (q_id, cluster) pairs; q_id schema follows the
-    # caller's id type (the bm25_index_topk qid-type lesson)
-    qid_type = dict(queries.dtypes)[id_col]
-    luts = {qid: (qvec, lut) for qid, qvec, lut in _luts(
-        base_q.collect(), books, sub)}
-    q_rows = [(r["q_id"], int(r["cluster"]), luts[r["q_id"]][1])
-              for r in q.select("q_id", "cluster").collect()]
-    qlut = spark.createDataFrame(
-        q_rows,
-        f"q_id {qid_type}, cluster int, lut array<array<double>>")
-
-    lists_tbl = _tables(index_dir)[_LISTS]
-    # candidate stage: code column ONLY — the vec/nrm columns never
-    # leave parquet here (ReadSchema asserted in tests)
-    codes = read_table(spark, lists_tbl).filter(
-        F.col("cluster").cast("int").isin(probed or [-1])
-    ).select(
-        F.col("cluster").cast("int").alias("cluster"),
-        F.col("id").cast("long").alias("n_id"),
-        F.col("pq"),
-    )
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("pq"), F.col("lut"),
-            lambda c, row: F.element_at(row, c.cast("int") + 1),
-        ),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    cand = (
-        codes.join(F.broadcast(qlut), "cluster")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id", adc.alias("adc_dist"))
-        .distinct()  # multi-assigned rows meet a query once per cell
-        .withColumn(
-            "cand_rank",
-            F.row_number().over(
-                Window.partitionBy("q_id")
-                .orderBy(F.col("adc_dist").asc(), F.col("n_id").asc())
-            ),
-        )
-        .filter(F.col("cand_rank") <= n_candidates)
-        .select("q_id", "n_id")
-    )
-    # exact re-rank: candidate vectors re-fetched from the SAME
-    # probed cells via a broadcast semi-join — candidate-shaped IO
-    ids = cand.select("n_id").distinct()
-    vecs = read_table(spark, lists_tbl).filter(
-        F.col("cluster").cast("int").isin(probed or [-1])
-    ).select(
-        F.col("id").cast("long").alias("n_id"),
-        F.col("vec").alias("n_vec"),
-        F.col("nrm").alias("n_norm"),
-    ).join(F.broadcast(ids), "n_id").distinct()
-    qv = spark.createDataFrame(
-        [(qid, v) for qid, (v, _) in luts.items()],
-        f"q_id {qid_type}, q_vec array<double>",
-    ).withColumn("q_norm", norm(F.col("q_vec")))
-    scored = (
-        cand.join(vecs, "n_id").join(F.broadcast(qv), "q_id")
-        .select(
-            "q_id", "n_id",
-            F.round(
-                cosine_from_norms(F.col("q_vec"), F.col("n_vec"),
-                                  F.col("q_norm"), F.col("n_norm")),
-                6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cos_sim").desc(), F.col("n_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )

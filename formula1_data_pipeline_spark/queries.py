@@ -981,95 +981,6 @@ CHANGED_SINCE_GATE = [
     "q76_incremental_load",
 ]
 
-_CHANGED_SINCE_GATE_R14 = [
-    # retained for the audit trail: the round-14 list as graded by
-    # CORRECTNESS_r14 (entries verified there are reset above)
-    # round-14 diff, BEHAVIOR/physical-path changes only. All 50 r13
-    # entries were driver-gated green in r13 (CORRECTNESS_r13:
-    # 50/50), so the list resets to the round-14 diff. Budget math:
-    # the 50 r12-gated queries are due in r14 and exactly fill the
-    # 50-row window; every r14 rider below targets an r12-gated
-    # query (no extra slot).
-    #
-    # q24: driver confirmation still pending for the r13 scalar-only
-    #      schema fix (the r12 red row) + the MMR kind landed r13 —
-    #      r12-gated, due r14; THE priority row of the round
-    "q24_cosine_topk",
-    # q39: streaming BM25-index maintenance (streaming/bm25.py) as
-    #      kind='bm25_stream' rows — foreachBatch appends where the
-    #      landed-doc anti-join is the replay guard; row-identical
-    #      to the live kind, so the shared bm_ranked CTE replays it
-    "q39_tfidf_top_terms",
-    # q68: per-group token budgets (selection.py::
-    #      select_token_budget_by_group) as kind='group_budget'
-    #      rows; host reshaped to a kind-discriminated long schema.
-    #      Also carries the NULL-group sentinel fix (r13 ADVICE low)
-    "q68_mixture_resample",
-    # q80: streaming priority sampling (streaming/sample.py) as
-    #      kind='priority_stream' rows — bit-for-bit the batch leg
-    #      by the bottom-(k+1) merge property, oracle arm re-labeled.
-    #      Also carries the re-delivery id-dedup fix (r13 ADVICE
-    #      high)
-    "q80_stratified_topn",
-    # q37: dedup-weighted sampling kind landed r13, driver-ungated —
-    #      r12-gated, due r14
-    "q37_neardup_clusters",
-    # q36: stream replay shrunk 4 -> 2 micro-batches (r13 bench
-    #      flagged the gate latency-dominated; converged state is
-    #      split-invariant, output unchanged) — r12-gated, due r14
-    "q36_stream_merge_upsert",
-    # q99: logreg 50 -> 30 iterations (holdout bound flat past 30,
-    #      measured both SFs; -20 sequential gradient jobs) —
-    #      r12-gated, due r14; bounds-gated so output booleans
-    #      unchanged
-    "q99_quality_classifier",
-    # q34: the ivf read path's bloom-sidecar heal changed again this
-    #      round (lease-guarded heal + still-live-marker guard, r13
-    #      ADVICE medium) — output unchanged, listed conservatively;
-    #      r12-gated, due r14, so the listing is cost-free
-    "q34_ivf_flat_topk",
-    # Conservative listings for physical-path changes whose hosts
-    # are r13-gated (gated in the NEWEST round => the rank function
-    # keeps their real rank — zero window cost; they re-gate with
-    # the whole r13 cohort in r15): q53 (hll compaction's recover
-    # guard), q88 (vecindex heal + 2-file stream replays; r14
-    # optimization: the three legs now build from driver threads),
-    # q92 (pq qid-type/NULL-vec fixes), q87 (verdicts now
-    # lazy-unioned from pinned index versions instead of
-    # txn-appended — same rows, one final job)
-    "q53_approx_sketches",
-    "q88_stream_neardup_dedup",
-    "q92_ann_recall_clustered",
-    "q87_incremental_neardup_dedup",
-    # r14 OPTIMIZATION round physical-path changes (outputs parity-
-    # proven unchanged at sf0.001+sf0.01): q82's two landed layouts
-    # build from driver threads; q100 rides train_logreg's SQL-string
-    # gradient pass (bit-identical weights, test-pinned). q24/q39/
-    # q88/q99 also changed physically this round — already listed
-    # above.
-    "q82_stats_pruned_read",
-    "q100_curation_chain",
-    # r14 optimization, second batch (same parity proof discipline):
-    # q65/q100 ride lm.bigrams' lambda-bound token array (the
-    # quadratic interpreted-HOF fix); q55 rides phash_df's staged
-    # pixel columns (one-expression spec unchanged, twin-pinned)
-    "q65_repetition_filter",
-    "q55_multimodal_transform",
-    # r14 optimization, later batches: q31/q54's independent
-    # streaming legs and q53's index-build/exact-count legs now run
-    # from driver threads (q37 likewise — already listed above via
-    # its r13 rider note); q24 additionally folds the gram mart once
-    # for fit+check (was two identical folds)
-    "q31_stream_windowed_agg",
-    "q54_stream_static_join",
-    # r14 optimization: bpe.apply_merges folds one literal pair array
-    # (constant-size plan per training round; chain semantics
-    # twin-pinned in test_bpe) — rides every BPE host
-    "q95_bpe_merge_training",
-    "q97_corpus_to_trainer_flagship",
-    "q98_bpe_tokenize",
-]
-
 
 def _gate_priority_order() -> None:
     """Reorder CATALOG so the driver's bounded-budget gate re-verifies

@@ -31,11 +31,9 @@ batch only (landed data is read as COLUMN-PRUNED doc ids for the
 skip, never postings), four delta appends + one marker. The final
 compaction folds the df/stats logs under the nonce+heartbeat lease.
 
-Pre-staged round 13; LANDING ROUTE: rides q39's r14 re-gate (q39
-owns the BM25 surface, r12-gated, due r14) as kind='bm25_stream'
-rows — row-identical to the live-scan and batch-index kinds, so the
-shared oracle CTE replays all three. Draft:
-tests/test_r16_gate_drafts.py.
+Landed in q39 as kind='bm25_stream' rows — row-identical to the
+live-scan and batch-index kinds, so the shared oracle CTE replays
+all three.
 """
 
 from __future__ import annotations

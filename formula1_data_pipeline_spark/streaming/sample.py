@@ -27,11 +27,8 @@ corpus is NEVER re-read, and state is O(k) at any corpus size. This
 is the streaming/mergeable weighted-reservoir story the batch
 docstring promises, as an operator.
 
-Pre-staged round 13; LANDING ROUTE: rides q80's r14 re-gate (q80
-owns the fixed-size sampling surface; r12-gated, due r14) as
-kind='priority_stream' rows — the SAME oracle as the landed
-kind='priority' leg, by exact convergence. Draft:
-tests/test_r16_gate_drafts.py.
+Landed in q80 as kind='priority_stream' rows — the SAME oracle as
+the kind='priority' leg, by exact convergence.
 """
 
 from __future__ import annotations

@@ -9,8 +9,12 @@ import math
 from formula1_data_pipeline_spark.operators.coreset import (
     kcenter_assign,
     kcenter_centers,
-    kcenter_select,
 )
+
+
+def _select(df, k):
+    """The (rank, vec_id, min_dist) selection trace."""
+    return [(r, i, d) for r, i, d, _ in kcenter_centers(df, k)]
 
 
 def _naive(vecs: dict[int, list[float]], k: int):
@@ -61,15 +65,14 @@ def _fixture(spark):
 def test_kcenter_matches_naive_greedy(spark):
     df, vecs = _fixture(spark)
     for k in (1, 2, 4, 6):
-        got = [(r["rank"], r["vec_id"], r["min_dist"])
-               for r in kcenter_select(spark, df, k).collect()]
+        got = _select(df, k)
         assert got == _naive(vecs, k), f"k={k}"
 
 
 def test_kcenter_covers_all_clusters_before_duplicates(spark):
     df, vecs = _fixture(spark)
     picks = [i for _, i, _ in _naive(vecs, 4)]
-    got = [r["vec_id"] for r in kcenter_select(spark, df, 4).collect()]
+    got = [i for _, i, _ in _select(df, 4)]
     assert got == picks
     # the four picks hit four DIFFERENT axis clusters
     axes = {max(range(4), key=lambda d: vecs[i][d]) for i in got}
@@ -82,8 +85,7 @@ def test_kcenter_covers_all_clusters_before_duplicates(spark):
 def test_kcenter_exhaustion_and_validation(spark):
     df, _ = _fixture(spark)
     # k > n: returns exactly n rows, no duplicate ids
-    rows = kcenter_select(spark, df, 100).collect()
-    ids = [r["vec_id"] for r in rows]
+    ids = [i for _, i, _ in _select(df, 100)]
     assert len(ids) == 8 and len(set(ids)) == 8
     import pytest
 
@@ -112,12 +114,9 @@ def test_kcenter_assign_nearest_with_rank_ties(spark):
 
 def test_kcenter_partitioning_invariant(spark):
     df, _ = _fixture(spark)
-    base = [(r["rank"], r["vec_id"])
-            for r in kcenter_select(spark, df, 5).collect()]
+    base = [(r, i) for r, i, _ in _select(df, 5)]
     for parts in (1, 7):
-        got = [(r["rank"], r["vec_id"])
-               for r in kcenter_select(spark, df.repartition(parts),
-                                       5).collect()]
+        got = [(r, i) for r, i, _ in _select(df.repartition(parts), 5)]
         assert got == base, f"parts={parts}"
 
 
@@ -133,8 +132,7 @@ def test_kcenter_excludes_zero_vectors(spark):
             "vec_id long, embedding array<float>",
         )
     )
-    picks = [r["vec_id"]
-             for r in kcenter_select(df.sparkSession, withz, 100).collect()]
+    picks = [i for _, i, _ in _select(withz, 100)]
     assert 99 not in picks and len(picks) == 8
     centers = kcenter_centers(withz, 4)
     out = {r["vec_id"]: (r["center_rank"], r["cos_sim"])

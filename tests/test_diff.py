@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from formula1_data_pipeline_spark.operators.diff import (
     content_hash,
     dataset_diff,
-    diff_summary,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -33,13 +32,6 @@ def test_statuses(spark, pair):
     got = {(r["status"], r["id"])
            for r in dataset_diff(old, new, ["id"]).collect()}
     assert got == {("removed", 1), ("changed", 3), ("added", 5)}
-
-
-def test_summary_counts(spark, pair):
-    old, new = pair
-    got = {r["status"]: r["n"] for r in
-           diff_summary(dataset_diff(old, new, ["id"])).collect()}
-    assert got == {"removed": 1, "changed": 1, "added": 1}
 
 
 def test_unchanged_rows_dropped(spark, pair):

@@ -12,7 +12,6 @@ from formula1_data_pipeline_spark.operators.classify import (
     hashed_bow_dense,
     hashed_bow_long,
     score_hashed_bow,
-    train_hashed_classifier,
 )
 
 
@@ -83,45 +82,6 @@ def test_hashed_bow_bigrams_extend_the_term_stream(spark):
             k = (doc_id, _bucket(t, "t3", 32))
             want[k] = want.get(k, 0) + 1
     assert got == want
-
-
-def test_train_hashed_classifier_separable_task(spark):
-    """A lexically separable task (docs mentioning 'clickbait junk'
-    vs clean prose): the trained filter must beat the majority class
-    by a wide margin on a held-out md5 split — the q99 bounds rule
-    (weights are float-path, never value-hashed)."""
-    from formula1_data_pipeline_spark.operators.sampling import (
-        hash_bucket,
-    )
-
-    rows = []
-    for i in range(400):
-        if i % 2:
-            rows.append((i, f"clickbait junk offer {i % 7} click now"))
-        else:
-            rows.append((i, f"the quarterly report {i % 5} shows "
-                            "steady measured growth"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    label = (F.col("doc_id") % 2 == 1).cast("int")
-    holdout = hash_bucket(F.col("doc_id"), "bow-split", 100) < 20
-    w, b = train_hashed_classifier(
-        docs.filter(~holdout).withColumn("y", label),
-        label=F.col("y"),
-        n_features=32, n_iter=40, lr=2.0,
-    )
-    assert len(w) == 32
-    scored = score_hashed_bow(docs.filter(holdout), w, b)
-    eval_df = scored.join(
-        docs.filter(holdout).select("doc_id",
-                                    label.alias("y")), "doc_id"
-    )
-    acc_row = eval_df.agg(
-        F.avg(((F.col("p_keep") > 0.5).cast("int")
-               == F.col("y")).cast("double")).alias("acc"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    assert acc_row["n"] > 30
-    assert acc_row["acc"] >= 0.95, acc_row
 
 
 def test_score_hashed_bow_is_shuffle_bounded(spark):

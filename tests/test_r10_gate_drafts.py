@@ -584,14 +584,13 @@ def test_kcenter_oracle_parity(spark):
     import duckdb
 
     from formula1_data_pipeline_spark.operators.coreset import (
-        kcenter_select,
+        kcenter_centers,
     )
     from formula1_data_pipeline_spark.queries import load
 
     K = 6
     emb = load(spark, SF_DIR, "embeddings")["embeddings"]
-    got = [(r["rank"], r["vec_id"], r["min_dist"])
-           for r in kcenter_select(spark, emb, K).collect()]
+    got = [(r, i, d) for r, i, d, _ in kcenter_centers(emb, K)]
 
     dot = ("list_reduce(list_transform(list_zip({a}, {b}), "
            "p -> p[1] * p[2]), (acc, x) -> acc + x)")

@@ -251,6 +251,12 @@ def test_group_budget_matches_naive_per_group_walk(spark):
     assert ("web", 3) in kept and ("web", 1) in kept
     assert ("code", 11) in kept and ("code", 10) not in kept
     assert ("math", 20) in kept  # via the default budget
+    # mixture semantics: the budgeted group keeps more tokens than the
+    # default-budget one
+    tokens = {}
+    for g, _, _, n, _ in got:
+        tokens[g] = tokens.get(g, 0) + n
+    assert tokens["web"] > tokens["math"]
 
 
 def test_group_without_budget_is_dropped_when_no_default(spark):

@@ -165,116 +165,3 @@ def test_string_ids_rank_then_pack_recipe(spark):
     ).collect()
     assert {(r["epoch_rank"], r["bin_id"], r["pack_pos"]) for r in again} \
         == {(r["epoch_rank"], r["bin_id"], r["pack_pos"]) for r in rows}
-
-
-# ------------------------------------------- shard integrity manifest
-
-
-def test_manifest_clean_export_all_contiguous(spark):
-    from formula1_data_pipeline_spark.operators.shards import (
-        shard_integrity_manifest,
-    )
-
-    ranked = epoch_shuffle(_docs(spark, 57), "e1", rows_per_shard=10)
-    man = shard_integrity_manifest(ranked).collect()
-    by_shard = {r["shard"]: r for r in man}
-    assert sorted(by_shard) == [0, 1, 2, 3, 4, 5]
-    assert all(by_shard[s]["n_rows"] == 10 for s in range(5))
-    assert by_shard[5]["n_rows"] == 7
-    assert all(r["contiguous"] for r in man)
-    assert all(r["rank_min"] == r["shard"] * 10 for r in man)
-
-
-def test_manifest_fingerprint_is_partitioning_and_order_free(spark):
-    from formula1_data_pipeline_spark.operators.shards import (
-        shard_integrity_manifest,
-    )
-
-    a = shard_integrity_manifest(
-        epoch_shuffle(_docs(spark, 57), "e1", rows_per_shard=10))
-    b = shard_integrity_manifest(
-        epoch_shuffle(_docs(spark, 57, parts=7), "e1",
-                      rows_per_shard=10))
-    assert sorted(map(tuple, a.collect())) == \
-        sorted(map(tuple, b.collect()))
-
-
-def test_manifest_detects_dropped_and_duplicated_rows(spark):
-    """The point of the manifest: a dropped row flips contiguous AND
-    the fingerprint; a duplicated row flips n_rows/contiguous; a
-    value-corrupted id flips ONLY the fingerprint — byte equality
-    without trusting order."""
-    from formula1_data_pipeline_spark.operators.shards import (
-        shard_integrity_manifest,
-    )
-
-    ranked = epoch_shuffle(_docs(spark, 40), "e1", rows_per_shard=10)
-    clean = {r["shard"]: r for r in
-             shard_integrity_manifest(ranked).collect()}
-    # drop one mid-shard row
-    victim = ranked.filter(F.col("shard") == 1) \
-        .orderBy("row_in_shard").limit(1).collect()[0]["doc_id"]
-    dropped = {r["shard"]: r for r in shard_integrity_manifest(
-        ranked.filter(F.col("doc_id") != victim)).collect()}
-    assert not dropped[1]["contiguous"]
-    assert dropped[1]["content_fp"] != clean[1]["content_fp"]
-    assert dropped[0] == clean[0]  # other shards untouched
-    # duplicate one row
-    dup = {r["shard"]: r for r in shard_integrity_manifest(
-        ranked.unionByName(
-            ranked.filter(F.col("doc_id") == victim))).collect()}
-    assert dup[1]["n_rows"] == 11 and not dup[1]["contiguous"]
-    # corrupt an id in place: counts/ranks fine, fingerprint flips
-    corrupted = ranked.withColumn(
-        "doc_id",
-        F.when(F.col("doc_id") == victim,
-               F.col("doc_id") + 1_000_000).otherwise(F.col("doc_id")))
-    bad = {r["shard"]: r for r in
-           shard_integrity_manifest(corrupted).collect()}
-    assert bad[1]["contiguous"]
-    assert bad[1]["n_rows"] == clean[1]["n_rows"]
-    assert bad[1]["content_fp"] != clean[1]["content_fp"]
-
-
-def test_manifest_matches_duckdb_replay(spark):
-    """Cross-engine: the whole manifest (fingerprints included)
-    replays in DuckDB from the same id set — the oracle its q94 r16
-    rider will use."""
-    import duckdb
-
-    from formula1_data_pipeline_spark.operators.shards import (
-        shard_integrity_manifest,
-    )
-
-    got = sorted(map(tuple, shard_integrity_manifest(
-        epoch_shuffle(_docs(spark, 57), "e1", rows_per_shard=10)
-    ).collect()))
-    want = sorted(map(tuple, duckdb.sql("""
-        WITH d AS (
-            SELECT range AS doc_id FROM range(57)
-        ), r AS (
-            SELECT doc_id,
-                   row_number() OVER (ORDER BY
-                       CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)
-                            || '|' || 'e1'), 1, 15)) AS BIGINT),
-                       doc_id) - 1 AS epoch_rank
-            FROM d
-        ), s AS (
-            SELECT doc_id, epoch_rank,
-                   epoch_rank // 10 AS shard,
-                   epoch_rank % 10 AS row_in_shard
-            FROM r
-        )
-        SELECT shard, count(*) AS n_rows,
-               min(epoch_rank) AS rank_min,
-               max(epoch_rank) AS rank_max,
-               max(epoch_rank) - min(epoch_rank) + 1 = count(*)
-                   AND min(row_in_shard) = 0
-                   AND max(row_in_shard) = count(*) - 1 AS contiguous,
-               bit_xor(CAST(('0x' || substr(md5(
-                   CAST(doc_id AS VARCHAR) || '|' ||
-                   CAST(epoch_rank AS VARCHAR) || '|' || 'shardfp-v1'
-               ), 1, 15)) AS BIGINT)) AS content_fp
-        FROM s GROUP BY shard ORDER BY shard
-    """).fetchall()))
-    assert got == want

@@ -106,6 +106,8 @@ def test_arrow_bucketing_degrades_per_row_on_bad_vectors(spark):
         (1, None),            # NULL vector
         (2, [1.0, 2.0]),      # wrong length
         (3, [0.5] * 64),
+        (4, [2.0] * 64),      # 0, 3, 4, 5 are parallel: cos_sim ties
+        (5, [0.25] * 64),
     ]
     df = spark.createDataFrame(
         rows,
@@ -116,14 +118,22 @@ def test_arrow_bucketing_degrades_per_row_on_bad_vectors(spark):
     )
     out = _lsh_bucketed_arrow(df, 64, 4, 5, "vec_id", "embedding", "n_")
     ids = {r.n_id for r in out.select("n_id").distinct().collect()}
-    assert ids == {0, 3}
+    assert ids == {0, 3, 4, 5}
 
     # End-to-end: ann_lsh_topk over the same frame completes and only
-    # scores the valid rows.
-    res = ann_lsh_topk(df, df.filter(F.col("vec_id") == 0), dim=64, k=5,
-                       n_tables=4, n_planes=5,
-                       id_col="vec_id", vec_col="embedding")
-    assert {r.n_id for r in res.collect()} <= {3}
+    # scores the valid rows. Every candidate ties at cos_sim 1.0, so
+    # the lower n_id ranks first and the cut falls at k per q_id — the
+    # same policy for the exact path.
+    queries = df.filter(F.col("vec_id").isin(0, 4))
+    want = {(0, 3, 1.0, 1), (0, 4, 1.0, 2), (4, 0, 1.0, 1), (4, 3, 1.0, 2)}
+    for res in (
+        ann_lsh_topk(df, queries, dim=64, k=2, n_tables=4, n_planes=5,
+                     id_col="vec_id", vec_col="embedding"),
+        cosine_topk(df, queries, k=2, id_col="vec_id",
+                    vec_col="embedding"),
+    ):
+        assert {tuple(r) for r in res.select(
+            "q_id", "n_id", "cos_sim", "rank").collect()} == want
 
 
 def test_arrow_bucketing_matches_column_form(spark):
@@ -273,6 +283,27 @@ def test_lloyd_training_carries_empty_clusters_forward(spark):
     assert all(r["count"] == 2 for r in got)  # dim rows per cluster
 
 
+def test_lloyd_training_rejects_ragged_vectors(spark):
+    """A vector whose length differs from the centroids' must fail
+    the training loudly — zip_with would NULL-pad it into a
+    -Infinity score and a silent cluster-0 assignment. A NULL vector
+    stays accepted (it scores NULL and never reaches a mean)."""
+    import pytest
+
+    from formula1_data_pipeline_spark.operators.similarity import (
+        train_ivf_centroids,
+    )
+
+    rows = [(i, [1.0, float(i), 0.5]) for i in range(6)]
+    schema = "vec_id long, embedding array<double>"
+    ok = spark.createDataFrame(rows + [(6, None)], schema)
+    got = train_ivf_centroids(ok, n_centroids=2, n_iter=1).collect()
+    assert got and {r["d"] for r in got} == {0, 1, 2}
+    ragged = spark.createDataFrame(rows + [(7, [1.0, 2.0])], schema)
+    with pytest.raises(Exception, match="vector 7 has length 2"):
+        train_ivf_centroids(ragged, n_centroids=2, n_iter=1)
+
+
 def test_semantic_dedup_accepts_pretrained_quantizer(spark):
     """Round 8: semantic_dedup(centroid_coefs=...) must route the
     assignment through the supplied quantizer. Passing the SAME
@@ -303,142 +334,6 @@ def test_semantic_dedup_accepts_pretrained_quantizer(spark):
     as_set = lambda df: {(r["id"], r["cluster"], r["kept"])
                          for r in df.collect()}
     assert as_set(explicit) == as_set(default)
-
-
-def test_semantic_contamination_flags_rephrasings_not_noise(spark):
-    """The fourth contamination tier (round 13): perturbed copies of
-    benchmark embeddings (cos ~0.999 — the semantic-equivalence mode
-    lexical tiers miss) are flagged; md5-noise vectors and the
-    synthetic corpus's natural pairs (cos <= ~0.51) are not. Every
-    corpus row is reported (the fuzzy_contamination shape)."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from formula1_data_pipeline_spark.operators.similarity import (
-        semantic_contamination,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).select("vec_id", "embedding")
-    pert = F.transform(
-        F.col("embedding"),
-        lambda x, i: x.cast("double")
-        + F.when(i == 0, F.lit(0.05)).otherwise(F.lit(0.0)),
-    )
-    copies = emb.filter(F.col("vec_id") % 17 == 0).select(
-        (F.col("vec_id") + 9_000_000).alias("bench_id"),
-        pert.alias("embedding"),
-    )
-
-    def noise_vec(v: int) -> list[float]:
-        return [
-            int(hashlib.md5(f"noise:{v}:{d}".encode())
-                .hexdigest()[:16], 16) / 2 ** 63 - 1.0
-            for d in range(64)
-        ]
-
-    noise_ids = [r["vec_id"] for r in
-                 emb.filter(F.col("vec_id") % 23 == 0)
-                 .select("vec_id").collect()]
-    noise = spark.createDataFrame(
-        [(v + 9_500_000, noise_vec(v)) for v in noise_ids],
-        "bench_id long, embedding array<double>",
-    )
-    out = semantic_contamination(
-        emb, copies.unionByName(noise), dim=64, threshold=0.9,
-    ).collect()
-    assert len(out) == emb.count()
-    flagged = {r["vec_id"] for r in out if r["semantic_contaminated"]}
-    assert flagged == {r["vec_id"] for r in
-                       emb.filter(F.col("vec_id") % 17 == 0).collect()}
-    for r in out:
-        if r["semantic_contaminated"]:
-            assert r["max_semantic_cos"] >= 0.9
-            assert r["n_semantic_matches"] >= 1
-        else:
-            assert r["n_semantic_matches"] == 0
-
-
-def test_cluster_balanced_resample_rates_and_determinism(spark):
-    """Cluster-balanced resampling (round 14, pre-staged for a q89
-    rider): per-cluster keep rates sqrt(n_min/n_cluster) over the
-    PRIMARY cell assignment, membership a pure function of the doc
-    id, degenerate embeddings pass through loudly."""
-    import pyspark.sql.functions as F
-
-    from formula1_data_pipeline_spark.operators.similarity import (
-        cluster_balanced_resample,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).select("vec_id", "embedding").unionByName(
-        spark.createDataFrame(
-            [(9_000_001, None), (9_000_002, [])],
-            "vec_id long, embedding array<float>"))
-    out = cluster_balanced_resample(emb, dim=64, n_centroids=8)
-    rows = out.collect()
-    n_in = emb.count()
-    # exactly one verdict row per input doc
-    assert len(rows) == n_in
-    assert len({r["vec_id"] for r in rows}) == n_in
-    # degenerate rows: cluster -1, kept, NULL rate
-    degs = [r for r in rows if r["vec_id"] > 9_000_000]
-    assert all(r["cluster"] == -1 and r["kept"]
-               and r["keep_rate"] is None for r in degs)
-    real = [r for r in rows if r["cluster"] >= 0]
-    # rates: sqrt(n_min/n) per cluster, rate 1.0 for the smallest
-    import math
-    by_cluster = {}
-    for r in real:
-        by_cluster.setdefault(r["cluster"], []).append(r)
-    sizes = {c: len(v) for c, v in by_cluster.items()}
-    n_min = min(sizes.values())
-    for c, members in by_cluster.items():
-        want = round(math.sqrt(n_min / sizes[c]), 6)
-        assert all(r["keep_rate"] == want for r in members), c
-        assert all(r["n_docs"] == sizes[c] for r in members)
-    smallest = min(sizes, key=lambda c: (sizes[c], c))
-    assert all(r["kept"] for r in by_cluster[smallest])
-    # kept counts track rate * n (binomial-ish, generous bound)
-    for c, members in by_cluster.items():
-        kept = sum(r["kept"] for r in members)
-        expect = sizes[c] * math.sqrt(n_min / sizes[c])
-        assert abs(kept - expect) <= max(6, 0.5 * expect), (c, kept)
-    # determinism + partitioning invariance
-    again = cluster_balanced_resample(
-        emb.repartition(7), dim=64, n_centroids=8).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-
-
-def test_cluster_balanced_resample_accepts_trained_quantizer(spark):
-    """A trained (cluster, cnorm, d, coef) table plugs in exactly as
-    semantic_dedup accepts it — assignment then follows the trained
-    cells (bounds-gate trained outputs; the q92 rule)."""
-    from formula1_data_pipeline_spark.evalsets import (
-        clustered_embeddings,
-    )
-    from formula1_data_pipeline_spark.operators.similarity import (
-        cluster_balanced_resample,
-        train_ivf_centroids,
-    )
-
-    emb = clustered_embeddings(spark, n=300, dim=8, n_clusters=3,
-                               std=0.2, seed=5)
-    coefs = train_ivf_centroids(emb, n_centroids=3, n_iter=3,
-                                id_col="vec_id",
-                                vec_col="embedding")
-    out = cluster_balanced_resample(
-        emb, dim=8, centroid_coefs=coefs,
-        id_col="vec_id", vec_col="embedding")
-    rows = out.collect()
-    assert len(rows) == 300
-    # trained cells on a balanced 3-cluster fixture: every cell's
-    # rate is near 1 (sizes within 2x of each other -> rate > 0.7)
-    assert all(r["keep_rate"] is not None and r["keep_rate"] > 0.5
-               for r in rows)
 
 
 def test_exact_all_pairs_twin_matches_one_cell_semantic_dedup(spark):

@@ -15,6 +15,12 @@ _SETTINGS = dict(max_examples=8, deadline=None)
 _P = 1 << 21
 
 
+def _winnow(docs):
+    """(id, pos, fp_hash) per fingerprint — q28's bulk composition of
+    the shared shingle-hex substrate and the windowed selection."""
+    return T.winnow_select(T.winnow_shingle_hexes(docs))
+
+
 def _ref_winnow(text: str, k: int = 3, w: int = 4) -> set:
     """Independent reference: literal paper algorithm — hash every
     k-gram, per window of w hashes select the minimum (rightmost on
@@ -54,7 +60,7 @@ def test_winnow_matches_reference(spark, docs):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r.id, r.pos, r.fp_hash)
-        for r in T.winnow_fingerprints_df(df).collect()
+        for r in _winnow(df).collect()
     }
     exp = {(d, p, h) for d, t in rows for p, h in _ref_winnow(t)}
     assert got == exp
@@ -77,7 +83,7 @@ def test_column_and_df_forms_agree(spark):
             col_rows.add((r.doc_id, _P - 1 - (e % _P), e >> 21))
     df_rows = {
         (r.id, r.pos, r.fp_hash)
-        for r in T.winnow_fingerprints_df(df).collect()
+        for r in _winnow(df).collect()
     }
     assert col_rows == df_rows
     # short/empty docs select nothing
@@ -95,7 +101,7 @@ def test_detection_guarantee_shared_run(spark):
         [(100, "p q r " + shared + " u v"), (101, shared + " zz yy")],
         "doc_id long, text string",
     )
-    fps = T.winnow_fingerprints_df(df).collect()
+    fps = _winnow(df).collect()
     h100 = {r.fp_hash for r in fps if r.id == 100}
     h101 = {r.fp_hash for r in fps if r.id == 101}
     assert h100 & h101
@@ -106,7 +112,7 @@ def test_density_bound(spark):
     least ceil(nh / w) fingerprints for a doc with nh hashes."""
     text = " ".join(f"w{i % 13}" for i in range(60))  # nh = 58
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    n = T.winnow_fingerprints_df(df).count()
+    n = _winnow(df).count()
     nh = 58
     w = T.WINNOW_W
     assert nh // w <= n <= nh - w + 1
@@ -122,7 +128,7 @@ def test_single_exchange_plan_shape(spark):
         [(1, "a b c d e f g h")], "doc_id long, text string"
     )
     plan = (
-        T.winnow_fingerprints_df(df)
+        _winnow(df)
         ._jdf.queryExecution().executedPlan().toString()
     )
     n_exchange = plan.count("Exchange") - plan.count("ReusedExchange")
@@ -153,7 +159,7 @@ def test_position_overflow_guard_fires(spark, monkeypatch):
         "doc_id long, text string",
     )
     with pytest.raises(Exception, match="shard it upstream"):
-        T.winnow_fingerprints_df(df).collect()
+        _winnow(df).collect()
 
 
 def test_q28_fused_matches_standalone_ops(spark):
@@ -174,6 +180,6 @@ def test_q28_fused_matches_standalone_ops(spark):
     }
     winnow = {
         ("winnow", r.id, None, r.pos, r.fp_hash)
-        for r in T.winnow_fingerprints_df(docs).collect()
+        for r in _winnow(docs).collect()
     }
     assert fused == bottomk | winnow
