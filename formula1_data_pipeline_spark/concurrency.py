@@ -1,16 +1,25 @@
-"""Driver-thread overlap for independent gate legs (guide §2.6).
+"""Driver-thread overlap for independent Spark legs (guide §2.6).
 
-Several catalog gates build more than one independent artifact before
-returning their lazy result frame (a batch-maintained index AND a
-stream-maintained one; three unrelated streaming replays; two txn
-table layouts). Each build is a chain of small sequential Spark jobs
-— at bounded-replay scale the cluster is mostly idle while the
-driver round-trips — so running the independent chains from a small
-thread pool lets the scheduler back-fill: wall time drops from the
-sum of the legs to roughly the max. Spark's scheduler is explicitly
-multi-job-safe (FIFO across concurrently submitted jobs), q71/q92/
-q96 have gated this shape since round 11, and the one piece of
-session-global state the streaming legs touch (the scoped
+This is the package's one concurrency primitive: every concurrent
+Spark leg goes through ``overlap``, and no other module keeps a thread
+pool. Its callers:
+
+- gates that build more than one independent artifact before returning
+  their lazy result frame (a batch-maintained index AND a
+  stream-maintained one; three unrelated streaming replays; two txn
+  table layouts);
+- the recall/dedup gates q71, q92 and q96, whose method legs each
+  collect an independent plan;
+- ``ModelRegistry.run``, which builds each DAG generation's writing
+  models (the marts) as legs, dbt's ``threads`` run stage.
+
+Each build is a chain of small sequential Spark jobs — at
+bounded-replay scale the cluster is mostly idle while the driver
+round-trips — so running the independent chains from a small thread
+pool lets the scheduler back-fill: wall time drops from the sum of the
+legs to roughly the max. Spark's scheduler is explicitly
+multi-job-safe (FIFO across concurrently submitted jobs), and the one
+piece of session-global state the streaming legs touch (the scoped
 shuffle-partition override) is reference-counted for exactly this
 (streaming/confs.py).
 
@@ -18,8 +27,15 @@ shuffle-partition override) is reference-counted for exactly this
 re-raise the first failure (after every thunk finished — a gate must
 not leave a half-built index behind a raised exception, or a live
 foreachBatch stream racing the test harness's scratch cleanup).
-Each thunk gets a job-description label so the UI attributes jobs to
-legs (guide §1.5; descriptions are thread-local).
+
+Legs inherit the caller's Spark local properties (job group, job
+description, scheduler pool) through pyspark's
+``inheritable_thread_target``: under pinned-thread mode a plain pool
+thread starts with empty properties, so its jobs would sit outside the
+caller's job group — unattributed, and out of reach of
+``cancelJobGroup``. Each leg gets its own clone of the properties, so
+one leg's job-description label never relabels a sibling's jobs
+(guide §1.5; descriptions are thread-local).
 """
 
 from __future__ import annotations
@@ -27,6 +43,7 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable, Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -34,7 +51,8 @@ def overlap(spark: SparkSession,
             legs: Sequence[tuple[str, Callable[[], Any]]]) -> list[Any]:
     """Run ``(label, thunk)`` legs concurrently; return results in
     input order. Raises the first leg's exception only after every
-    leg has settled."""
+    leg has settled. Each leg runs with a clone of the caller's local
+    properties and ``label`` as its job description."""
     sc = spark.sparkContext
 
     def run(label: str, thunk: Callable[[], Any]) -> Any:
@@ -45,7 +63,11 @@ def overlap(spark: SparkSession,
             sc.setJobDescription(None)
 
     with ThreadPoolExecutor(max_workers=max(1, len(legs))) as pool:
-        futures = [pool.submit(run, label, thunk) for label, thunk in legs]
+        # one inheritable_thread_target call per leg: each call clones
+        # the caller's properties, so legs never share one Properties
+        futures = [pool.submit(inheritable_thread_target(spark)(run),
+                               label, thunk)
+                   for label, thunk in legs]
         results: list[Any] = []
         first_exc: BaseException | None = None
         for (label, _), f in zip(legs, futures):

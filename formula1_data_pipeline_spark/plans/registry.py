@@ -23,7 +23,6 @@ Spark equivalent implemented here:
 from __future__ import annotations
 
 from collections.abc import Callable, Mapping
-from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 
@@ -97,7 +96,6 @@ class ModelRegistry:
         name: str,
         built: Mapping[str, DataFrame],
         materialize_to: str | None,
-        materialize_all: bool,
     ) -> DataFrame:
         """Build (and optionally persist) one model from its resolved
         parents. Reads ``built`` only — safe to call from a worker
@@ -124,9 +122,7 @@ class ModelRegistry:
             path = f"{materialize_to}/{name}"
             txn_replace(spark, df, path, key=model.incremental_key)
             df = read_table(spark, path)
-        elif materialize_to and (
-            materialize_all or model.materialized == "table"
-        ):
+        elif materialize_to and model.materialized == "table":
             # Table marts commit through the manifest protocol, like
             # the incremental path above: publication is atomic (a
             # dashboard reading mid-rebuild sees the old mart or the
@@ -184,69 +180,49 @@ class ModelRegistry:
         sources: Mapping[str, DataFrame],
         targets: list[str] | None = None,
         materialize_to: str | None = None,
-        materialize_all: bool = False,
-        register_views: bool = False,
-        threads: int = 4,
     ) -> dict[str, DataFrame]:
         """Build every model (or the listed targets + upstreams).
 
         ``materialize_to``: optional directory; models declared
-        ``materialized='table'`` are written there as parquet and read
-        back (lineage cut == dbt CTAS). When None everything stays lazy,
-        which is what tests and the oracle gate want.
+        ``materialized='table'`` (or ``'incremental'``) are written
+        there and read back (lineage cut == dbt CTAS). When None
+        everything stays lazy, which is what tests and the oracle gate
+        want.
 
-        ``materialize_all``: with ``materialize_to``, persist EVERY
-        model, not just the 'table' marts — each model then builds on
-        its parents' parquet instead of their logical plans. Use when
-        many downstream consumers will each trigger the DAG (e.g. the
-        assertion runner's one-job-per-model checks), which would
-        otherwise recompute the shared chain prefix per consumer.
-
-        ``register_views``: opt-in ``createOrReplaceTempView(name)`` for
-        each built model so ``spark.sql()`` users see the DAG. Off by
-        default — it mutates session-global temp-view state and would
-        silently clobber same-named views.
-
-        ``threads``: concurrency for *materializing* runs, matching the
-        reference's dbt ``threads: 4`` (``dbt/profiles.yml:13``) —
-        independent DAG branches (the three staging->int legs, the
-        three marts) persist concurrently; Spark's scheduler accepts
-        jobs from multiple threads and runs them against the same
-        executor pool. Lazy runs (``materialize_to=None``) only compose
-        logical plans — no jobs to overlap — so they always take the
-        serial path and are byte-identical to previous behavior.
+        One loop serves lazy and materializing runs: it walks the DAG
+        generation by generation. Views (and every model of a lazy
+        run) only compose plans, so they build inline. Each
+        generation's writing models run as ``concurrency.overlap``
+        legs labelled ``model: <name>`` — the reference's dbt
+        ``threads: 4`` run stage (``dbt/profiles.yml:13``), with the
+        legs inheriting the caller's job group. In the catalog DAGs
+        the writers of a generation are at most 3 wide (the three
+        marts), so the dbt cap never binds. The result is keyed in
+        ``topo_order``.
         """
+        from formula1_data_pipeline_spark.concurrency import overlap
+
         built: dict[str, DataFrame] = dict(sources)
         order = self.topo_order(targets)
-
-        if materialize_to is None or threads <= 1:
-            for name in order:
-                df = self._build_one(spark, name, built,
-                                     materialize_to, materialize_all)
-                built[name] = df
-                if register_views:
-                    df.createOrReplaceTempView(name)
-            return {n: built[n] for n in order}
-
         ts = TopologicalSorter({n: set(self.models[n].refs) for n in order})
         ts.prepare()
-        with ThreadPoolExecutor(max_workers=threads) as pool:
-            running = {}
-            while ts.is_active():
-                for name in ts.get_ready():
-                    running[pool.submit(
-                        self._build_one, spark, name, built,
-                        materialize_to, materialize_all,
-                    )] = name
-                done, _ = wait(running, return_when=FIRST_COMPLETED)
-                for fut in done:
-                    name = running.pop(fut)
-                    df = fut.result()  # first failure propagates here
-                    # only this coordinator thread mutates `built`;
-                    # workers see their parents' entries via the
-                    # happens-before of submit()
-                    built[name] = df
-                    if register_views:
-                        df.createOrReplaceTempView(name)
-                    ts.done(name)
+        while ts.is_active():
+            ready = ts.get_ready()
+            writers = [n for n in ready if materialize_to
+                       and self.models[n].materialized != "view"]
+            for name in ready:
+                if name not in writers:
+                    built[name] = self._build_one(spark, name, built,
+                                                  materialize_to)
+            if writers:
+                # legs read ``built`` only; the parents they need were
+                # all stored by earlier generations
+                dfs = overlap(spark, [
+                    (f"model: {name}",
+                     lambda name=name: self._build_one(
+                         spark, name, built, materialize_to))
+                    for name in writers
+                ])
+                built.update(zip(writers, dfs))
+            ts.done(*ready)
         return {n: built[n] for n in order}

@@ -14,8 +14,8 @@ Sequence (mirrors reference ``dags/open_f1_historical.py:111-152`` and
    append-only, all-string (F12 stringify).
 2. **S6 replace_by_key** — full customer load partitioned by
    c_mktsegment, then a reload of the BUILDING segment with adjusted
-   balances; dynamic partition overwrite must replace exactly that
-   segment and leave the rest untouched.
+   balances; the manifest-committed partition replace must replace
+   exactly that segment and leave the rest untouched.
 3. **S6-alt/S7 merge_upsert** — supplier last-write-wins merge where
    the incoming batch carries a new column (schema drift): old rows
    keep NULL in the drifted column (F16-style tolerance), updated rows
@@ -82,8 +82,8 @@ def _probe(df: DataFrame, step: str, key: str, val: str,
     SELECT 'skip', c_custkey, c_acctbal, CAST(NULL AS VARCHAR) FROM skipped
     """,
     doc="Ingest write path under the gate (S4-S8): append_raw x2 -> "
-        "replace_by_key full-load + segment reload (dynamic partition "
-        "overwrite) -> merge_upsert with schema drift -> skip_loaded "
+        "replace_by_key full-load + segment reload (manifest-committed "
+        "partition replace) -> merge_upsert with schema drift -> skip_loaded "
         "anti-join; landed parquet read back and probed row-by-row, "
         "oracle replays the sequence in SQL",
 )

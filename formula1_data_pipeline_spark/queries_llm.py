@@ -1150,8 +1150,7 @@ def q71_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_topk,
         ivf_flat_topk,
     )
-
-    from concurrent.futures import ThreadPoolExecutor
+    from formula1_data_pipeline_spark.concurrency import overlap
 
     emb = load(spark, sf_dir, "embeddings")["embeddings"]
     queries = emb.filter(F.col("vec_id") < 10)
@@ -1167,17 +1166,17 @@ def q71_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         return {(r.q_id, r.n_id) for r in df.select("q_id", "n_id")
                 .collect()}
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_exact = pool.submit(pairs, cosine_topk(
+    exact, lsh, ivf = overlap(spark, [
+        ("q71: exact topk", lambda: pairs(cosine_topk(
             emb, queries, k=5, id_col="vec_id", vec_col="embedding",
-            dim=64))
-        f_lsh = pool.submit(pairs, ann_lsh_topk(
+            dim=64))),
+        ("q71: lsh topk", lambda: pairs(ann_lsh_topk(
             emb, queries, dim=64, k=5, n_tables=16, n_planes=5,
-            id_col="vec_id", vec_col="embedding"))
-        f_ivf = pool.submit(pairs, ivf_flat_topk(
+            id_col="vec_id", vec_col="embedding"))),
+        ("q71: ivf topk", lambda: pairs(ivf_flat_topk(
             emb, queries, dim=64, k=5, n_centroids=16, n_probe=4,
-            n_assign=3, id_col="vec_id", vec_col="embedding"))
-        exact, lsh, ivf = f_exact.result(), f_lsh.result(), f_ivf.result()
+            n_assign=3, id_col="vec_id", vec_col="embedding"))),
+    ])
     rows = [
         ("ivf", len(exact), len(exact & ivf) >= 0.75 * len(exact)),
         ("lsh", len(exact), len(exact & lsh) >= 0.60 * len(exact)),
@@ -1582,8 +1581,7 @@ def _q92_sql() -> str:
         "encode/decode with the scales inlined as literals",
 )
 def q92_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
-
+    from formula1_data_pipeline_spark.concurrency import overlap
     from formula1_data_pipeline_spark.evalsets import clustered_embeddings
     from formula1_data_pipeline_spark.operators.quantize import (
         sq8_decode,
@@ -1636,8 +1634,6 @@ def q92_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
             ivf_index_topk,
         )
         from formula1_data_pipeline_spark.scratch import scratch_dir
-
-        from formula1_data_pipeline_spark.concurrency import overlap
 
         # same localCheckpoint rationale as the main fixture: the
         # build re-scans this frame per Lloyd round and 3x for the
@@ -1693,23 +1689,19 @@ def q92_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("codes"),
         )
 
-    with ThreadPoolExecutor(max_workers=6) as pool:
-        f_exact = pool.submit(pairs, cosine_topk(
-            emb, queries, k=5, id_col="vec_id", vec_col="embedding"))
-        f_lsh = pool.submit(pairs, ann_lsh_topk(
+    exact, lsh, hash_p, lloyd_p, idx_row, sq8_collected = overlap(spark, [
+        ("q92: exact topk", lambda: pairs(cosine_topk(
+            emb, queries, k=5, id_col="vec_id", vec_col="embedding"))),
+        ("q92: lsh topk", lambda: pairs(ann_lsh_topk(
             emb, queries, dim=16, k=5, n_tables=16, n_planes=5,
-            id_col="vec_id", vec_col="embedding"))
-        f_hash = pool.submit(pairs, ivf_flat_topk(
+            id_col="vec_id", vec_col="embedding"))),
+        ("q92: ivf_hash topk", lambda: pairs(ivf_flat_topk(
             emb, queries, dim=16, k=5, n_centroids=20, n_probe=1,
-            id_col="vec_id", vec_col="embedding"))
-        f_lloyd = pool.submit(lloyd_pairs)
-        f_index = pool.submit(index_row)
-        f_sq8 = pool.submit(lambda: sq8_rows().collect())
-        exact = f_exact.result()
-        lsh, hash_p, lloyd_p = (f_lsh.result(), f_hash.result(),
-                                f_lloyd.result())
-        idx_row = f_index.result()
-        sq8_collected = f_sq8.result()
+            id_col="vec_id", vec_col="embedding"))),
+        ("q92: ivf_lloyd leg", lloyd_pairs),
+        ("q92: index leg", index_row),
+        ("q92: sq8 leg", lambda: sq8_rows().collect()),
+    ])
     r_hash = len(exact & hash_p) / len(exact)
     r_lloyd = len(exact & lloyd_p) / len(exact)
     rows = [
@@ -1849,8 +1841,7 @@ def q95_bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hashes: trained centroids are float means (q92 rule)",
 )
 def q96_semantic_dedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
-
+    from formula1_data_pipeline_spark.concurrency import overlap
     from formula1_data_pipeline_spark.evalsets import clustered_embeddings
     from formula1_data_pipeline_spark.operators.similarity import (
         semantic_dedup,
@@ -1923,12 +1914,11 @@ def q96_semantic_dedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     id_col="vec_id", vec_col="embedding")
         return dropped(n_centroids=20, n_assign=1, centroid_coefs=coefs)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_exact = pool.submit(exact_dropped)
-        f_hash = pool.submit(dropped, n_centroids=20, n_assign=1)
-        f_lloyd = pool.submit(lloyd_dropped)
-        exact, hash_d, lloyd_d = (f_exact.result(), f_hash.result(),
-                                  f_lloyd.result())
+    exact, hash_d, lloyd_d = overlap(spark, [
+        ("q96: exact leg", exact_dropped),
+        ("q96: hash leg", lambda: dropped(n_centroids=20, n_assign=1)),
+        ("q96: lloyd leg", lloyd_dropped),
+    ])
     ne = max(len(exact), 1)
     r_hash = len(hash_d & exact) / ne
     r_lloyd = len(lloyd_d & exact) / ne

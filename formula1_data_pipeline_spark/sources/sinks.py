@@ -21,15 +21,14 @@ recovery (``dags/open_f1_historical.py:111-152``,
 - **skip_loaded** (S8): left-anti join of candidate keys against
   already-landed keys.
 
-Both mutating sinks default to the **manifest commit protocol**
+Both mutating sinks commit through the **manifest commit protocol**
 (``sources/txn.py``): immutable data dirs + an atomically-published
-single-object manifest, the object-store-safe replacement for the
-directory-rename swap (atomic only on POSIX/HDFS) and the dynamic
-partition overwrite (non-transactional on S3-class stores). Read the
-landed tables back with ``txn.read_table`` — it falls through to a
-plain parquet read for non-manifest layouts. ``protocol="rename"`` /
-``protocol="overwrite"`` keep the old physical layouts for plain-
-parquet consumers.
+single-object manifest, transactional on object stores where a
+directory-rename swap (atomic only on POSIX/HDFS) or a dynamic
+partition overwrite (non-transactional on S3-class stores) is not.
+Read the landed tables back with ``txn.read_table`` — it falls
+through to a plain parquet read for the plain layouts ``append_raw``
+lands.
 
 At 100 TB: raw tables partition by the replace key (session_key here,
 date/hour for event feeds), so a realtime refresh touches one
@@ -45,46 +44,6 @@ from pyspark.sql import functions as F
 from formula1_data_pipeline_spark.functions.cleaning import stringify_all
 
 
-# one Hadoop-FS access layer for the whole sources package (txn.py owns
-# it; duplicating it here invited divergence — r4 review finding)
-from formula1_data_pipeline_spark.sources.txn import (  # noqa: E402
-    _exists as _path_exists,
-    _fs,
-)
-
-
-def _swap_in(spark: SparkSession, staged: str, path: str) -> None:
-    """Promote a fully-written staged directory to ``path`` with
-    directory renames — atomic on POSIX and HDFS, so a concurrent
-    reader sees either the old table or the new one, never a
-    half-overwritten mix of both (the failure mode of overwriting the
-    live directory in place). The displaced old table is removed only
-    after the new one is live; on any earlier failure the live table
-    is untouched and only a staged/old dir leaks for manual cleanup.
-
-    Object stores have no atomic rename — there the production path is
-    a transactional table format (Delta/Iceberg MERGE, reference
-    semantics ``dags/open_f1_realtime.py:153-170``); this rename
-    protocol is the strongest dependency-free equivalent.
-    """
-    import uuid
-
-    jvm = spark._jvm
-    fs, hpath = _fs(spark, path)
-    hstaged = jvm.org.apache.hadoop.fs.Path(staged)
-    hold = jvm.org.apache.hadoop.fs.Path(f"{path}.old-{uuid.uuid4().hex[:8]}")
-    if fs.exists(hpath):
-        if not fs.rename(hpath, hold):
-            raise IOError(f"swap: could not displace live table {path}")
-    if not fs.rename(hstaged, hpath):
-        # roll the old table back so readers keep a live path
-        if fs.exists(hold):
-            fs.rename(hold, hpath)
-        raise IOError(f"swap: could not promote staged table to {path}")
-    if fs.exists(hold):
-        fs.delete(hold, True)
-
-
 def append_raw(df: DataFrame, path: str,
                partition_by: list[str] | None = None) -> None:
     """S4+S5: land as all-string parquet, append-only."""
@@ -95,37 +54,23 @@ def append_raw(df: DataFrame, path: str,
 
 
 def replace_by_key(df: DataFrame, path: str, key: str,
-                   protocol: str = "manifest",
                    stats_cols: list[str] | None = None) -> None:
     """S6: atomically replace exactly the ``key`` partitions present in
     ``df`` — the delete+reload upsert.
 
-    ``protocol="manifest"`` (default) commits via txn.py: new partition
-    dirs staged invisibly, untouched partitions carried forward by
-    reference, one atomic manifest publish — transactional on object
-    stores. ``protocol="overwrite"`` is the legacy dynamic partition
-    overwrite (plain parquet layout, non-transactional on S3-class
-    stores).
+    Commits via txn.py: new partition dirs staged invisibly, untouched
+    partitions carried forward by reference, one atomic manifest
+    publish — transactional on object stores.
 
-    ``stats_cols`` (manifest protocol only): record per-segment
-    min/max for these columns so ``txn.read_table(prune=...)`` can
-    skip segments — e.g. land sessions with ``stats_cols=
-    ["date_start"]`` and season-window reads never list the other
-    seasons' files. ``None`` inherits whatever the table already
-    records."""
-    if protocol == "manifest":
-        from formula1_data_pipeline_spark.sources.txn import txn_replace
+    ``stats_cols``: record per-segment min/max for these columns so
+    ``txn.read_table(prune=...)`` can skip segments — e.g. land
+    sessions with ``stats_cols=["date_start"]`` and season-window reads
+    never list the other seasons' files. ``None`` inherits whatever
+    the table already records."""
+    from formula1_data_pipeline_spark.sources.txn import txn_replace
 
-        txn_replace(df.sparkSession, stringify_all(df), path, key,
-                    stats_cols=stats_cols)
-        return
-    (
-        stringify_all(df)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(key)
-        .parquet(path)
-    )
+    txn_replace(df.sparkSession, stringify_all(df), path, key,
+                stats_cols=stats_cols)
 
 
 def merge_upsert(
@@ -135,7 +80,6 @@ def merge_upsert(
     keys: list[str],
     order: list[Column],
     order_cols: list[str] | None = None,
-    protocol: str = "manifest",
 ) -> None:
     """S6/S7: last-write-wins merge into a non-partitioned table. New
     columns from schema drift survive as NULLs on old rows (the
@@ -148,13 +92,10 @@ def merge_upsert(
     order column gets the same NULL tolerance as any other drifted
     column.
 
-    ``protocol="manifest"`` (default) commits through txn.txn_merge:
-    the merge result is staged invisibly and published with one atomic
-    put-if-absent manifest — transactional on object stores, and
-    concurrent merges retry against the new snapshot instead of losing
-    updates. ``protocol="rename"`` keeps the legacy staged-write +
-    directory-rename swap (plain parquet layout; atomic on POSIX/HDFS
-    only).
+    Commits through txn.txn_merge: the merge result is staged
+    invisibly and published with one atomic put-if-absent manifest —
+    transactional on object stores, and concurrent merges retry
+    against the new snapshot instead of losing updates.
 
     Read-modify-write: fine for dimension-sized tables; big facts
     should use replace_by_key partitioning instead.
@@ -162,8 +103,7 @@ def merge_upsert(
     from formula1_data_pipeline_spark.operators.dedup_priority import (
         dedup_by_priority,
     )
-
-    import uuid
+    from formula1_data_pipeline_spark.sources.txn import txn_merge
 
     def _ensure_order_cols(frame: DataFrame) -> DataFrame:
         for name in order_cols or []:
@@ -188,20 +128,7 @@ def merge_upsert(
             order=order,
         )
 
-    if protocol == "manifest":
-        from formula1_data_pipeline_spark.sources.txn import txn_merge
-
-        txn_merge(spark, path, merge_fn)
-        return
-
-    merged = merge_fn(
-        spark.read.parquet(path) if _path_exists(spark, path) else None
-    )
-    staged = f"{path}.staged-{uuid.uuid4().hex[:8]}"
-    # the merged plan reads lazily from the live files — fully
-    # materialize into the staged dir before touching the table
-    merged.write.mode("overwrite").parquet(staged)
-    _swap_in(spark, staged, path)
+    txn_merge(spark, path, merge_fn)
 
 
 def skip_loaded(candidates: DataFrame, loaded: DataFrame,

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import threading
 import time
+import uuid
 
 import pytest
 
@@ -106,3 +107,65 @@ def test_overlap_waits_for_all_then_raises_first_failure(spark):
         overlap(spark, [("bad", bad_leg), ("ok", ok_leg)])
     # the surviving leg ran to completion before the raise
     assert finished.is_set()
+
+
+def test_overlap_legs_inherit_callers_job_group(spark):
+    """Legs run in the caller's job group (so it attributes and can
+    cancel their jobs), each with its own description label — one
+    leg's label never relabels a sibling."""
+    sc = spark.sparkContext
+    group = f"overlap-group-{uuid.uuid4().hex[:8]}"
+    labelled = threading.Barrier(2, timeout=30)
+
+    def leg(n: int):
+        def thunk():
+            labelled.wait()  # both legs have set their description
+            seen = (sc.getLocalProperty("spark.jobGroup.id"),
+                    sc.getLocalProperty("spark.job.description"))
+            spark.range(n).collect()
+            return seen
+        return thunk
+
+    sc.setJobGroup(group, "overlap attribution")
+    try:
+        seen = overlap(spark, [("leg a", leg(3)), ("leg b", leg(5))])
+    finally:
+        sc.setJobGroup(None, None)
+    assert seen == [(group, "leg a"), (group, "leg b")]
+    # the caller ran no job of its own: every job in the group is a leg's
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+
+
+def test_cancel_job_group_stops_an_overlap_leg(spark):
+    sc = spark.sparkContext
+    group = f"overlap-cancel-{uuid.uuid4().hex[:8]}"
+    started = threading.Event()
+
+    def sleeping_leg():
+        started.set()
+        return sc.parallelize([0], 1).map(lambda _: time.sleep(60)) \
+            .collect()
+
+    def cancel_once_running() -> None:
+        started.wait(timeout=30)
+        deadline = time.monotonic() + 30
+        tracker = sc.statusTracker()
+        while time.monotonic() < deadline:
+            if any(j in tracker.getActiveJobsIds()
+                   for j in tracker.getJobIdsForGroup(group)):
+                sc.cancelJobGroup(group)
+                return
+            time.sleep(0.1)
+
+    canceller = threading.Thread(target=cancel_once_running)
+    canceller.start()
+    t0 = time.monotonic()
+    sc.setJobGroup(group, "overlap cancel", interruptOnCancel=True)
+    try:
+        with pytest.raises(Exception, match="cancel"):
+            overlap(spark, [("sleeper", sleeping_leg)])
+    finally:
+        sc.setJobGroup(None, None)
+        canceller.join(timeout=60)
+    # cancelled well before the task's 60 s sleep could finish
+    assert time.monotonic() - t0 < 45

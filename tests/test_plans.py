@@ -135,8 +135,8 @@ def test_concurrent_materialization_overlaps_independent_branches(
         spark, tmp_path):
     """dbt threads:4 parity (reference dbt/profiles.yml:13): with a
     materializing run, independent models build concurrently — their
-    (start, end) wall-time intervals overlap — and results match the
-    serial build. Lazy runs stay serial by construction."""
+    (start, end) wall-time intervals overlap — and the materialized
+    tables match the lazy run's."""
     import time
 
     from formula1_data_pipeline_spark.plans.registry import ModelRegistry
@@ -158,20 +158,16 @@ def test_concurrent_materialization_overlaps_independent_branches(
             slow_model(n))
 
     src = spark.range(10).withColumnRenamed("id", "v")
-    out = reg.run(spark, {"src": src}, materialize_to=str(tmp_path),
-                  threads=2)
+    out = reg.run(spark, {"src": src}, materialize_to=str(tmp_path))
     (a0, a1), (b0, b1) = spans["left_mart"], spans["right_mart"]
     assert max(a0, b0) < min(a1, b1), f"no overlap: {spans}"
     assert sorted(r[0] for r in out["left_mart"].collect()) == list(range(10))
 
-    # serial run (threads=1) produces the same tables
-    spans.clear()
-    out1 = reg.run(spark, {"src": src},
-                   materialize_to=str(tmp_path / "serial"), threads=1)
-    assert max(spans["left_mart"][0], spans["right_mart"][0]) >= min(
-        spans["left_mart"][1], spans["right_mart"][1]), "serial overlapped"
-    assert sorted(map(tuple, out1["right_mart"].collect())) == \
-        sorted(map(tuple, out["right_mart"].collect()))
+    lazy = reg.run(spark, {"src": src})
+    for n in ("left_mart", "right_mart"):
+        assert out[n].columns == lazy[n].columns, n
+        assert sorted(map(tuple, out[n].collect())) == \
+            sorted(map(tuple, lazy[n].collect())), n
 
 
 def test_salted_band_join_partitioning_follows_shuffle_conf(spark):

@@ -225,8 +225,8 @@ def test_replace_carries_untouched_partitions_by_reference(
 
 
 def test_merge_upsert_default_protocol_is_manifest(spark, tmp_path):
-    """The production sink commits via the manifest protocol by
-    default — no .staged/.old rename debris, versions advance."""
+    """The production sink commits via the manifest protocol — no
+    .staged/.old rename debris, versions advance."""
     path = str(tmp_path / "t")
     df1 = _df(spark, [("1", "90.0")], ["k", "d"])
     merge_upsert(spark, df1, path, keys=["k"],
@@ -329,20 +329,6 @@ def test_vacuum_retention_spares_fresh_dirs(spark, tmp_path):
     # with retention waived (single-writer window) it is reclaimable
     txn_merge(spark, path, lambda ex: ex)
     assert vacuum(spark, path, keep_versions=1, min_age_sec=0) >= 1
-
-
-def test_merge_upsert_rename_protocol_still_works(spark, tmp_path):
-    """The legacy staged-write + directory-rename path stays available
-    for plain-parquet consumers (protocol='rename')."""
-    path = str(tmp_path / "t")
-    merge_upsert(spark, _df(spark, [("1", "90.0")], ["k", "d"]), path,
-                 keys=["k"], order=[F.col("d").desc()], protocol="rename")
-    merge_upsert(spark, _df(spark, [("1", "89.0"), ("2", "91.0")],
-                            ["k", "d"]), path,
-                 keys=["k"], order=[F.col("d").desc()], protocol="rename")
-    got = {r["k"]: r["d"] for r in spark.read.parquet(path).collect()}
-    assert got == {"1": "90.0", "2": "91.0"}
-    assert sorted(p.name for p in tmp_path.iterdir()) == ["t"]
 
 
 def test_object_store_scheme_refuses_loudly(spark):
