@@ -17,14 +17,15 @@ whole corpus, independent of how the source was split into
 micro-batches — the ``stream_cms_counters`` convergence contract,
 here over the general algebraic-aggregate surface.
 
-Re-delivery safety scope (shared with heavyhitters/histogram): the
+Re-delivery safety scope (shared with every staged leg): the
 checkpoint location is STABLE (``work_dir/ckpt``) and the source
-staging is written ONCE under an order-free content-fingerprint
-guard — a re-call against the same ``work_dir`` with a CHANGED
-corpus raises loudly rather than silently replaying old staging
-under recycled batch ids. Continuous ingestion is the explicit
-delta-log surface (``agg_mart_append`` per arriving batch with
-caller-owned batch ids); this entry point replays a FIXED snapshot.
+staging is written ONCE under ``scaffold.stage``'s order-free
+content-fingerprint guard — a re-call against the same
+``work_dir`` with a CHANGED corpus raises loudly rather than
+silently replaying old staging under recycled batch ids.
+Continuous ingestion is the explicit delta-log surface
+(``agg_mart_append`` per arriving batch with caller-owned batch
+ids); this entry point replays a FIXED snapshot.
 
 Scale shape per micro-batch: one partial-agg pass over the batch
 only (landed data never re-read), one |batch groups|-row commit.
@@ -41,6 +42,7 @@ import pathlib
 from pyspark.sql import DataFrame, SparkSession
 
 from formula1_data_pipeline_spark.scratch import scratch_dir
+from formula1_data_pipeline_spark.streaming.scaffold import run, source, stage
 
 
 def stream_agg_mart(
@@ -49,8 +51,6 @@ def stream_agg_mart(
     group_cols: list[str],
     value_col: str,
     n_source_files: int = 3,
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
     work_dir: str | None = None,
 ) -> DataFrame:
     """Replay ``documents`` as a file stream of ``n_source_files``
@@ -65,38 +65,14 @@ def stream_agg_mart(
         agg_mart_append,
         agg_mart_stats,
     )
-    from formula1_data_pipeline_spark.streaming.confs import (
-        scoped_shuffle_partitions,
-    )
-    from formula1_data_pipeline_spark.streaming.scaffold import (
-        content_fingerprint,
-    )
 
     docs = (spark.read.parquet(documents_path)
             .select(*group_cols, value_col))
     base = pathlib.Path(work_dir if work_dir is not None
                         else scratch_dir(prefix="stream_aggmart_"))
-    src_dir = str(base / "src")
     mart_dir = str(base / "mart")
-    if (base / "src").exists():
-        staged_fp = content_fingerprint(spark.read.parquet(src_dir))
-        if staged_fp != content_fingerprint(docs):
-            raise ValueError(
-                "stream_agg_mart: work_dir holds a staging of a "
-                f"different corpus (fingerprint {staged_fp} vs "
-                f"{content_fingerprint(docs)}) — this entry point "
-                "replays a FIXED snapshot; use a fresh work_dir, or "
-                "append the delta through agg_mart_append (the "
-                "incremental surface)")
-    else:
-        docs.repartition(n_source_files).write.parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
+    stream = source(spark, docs.schema,
+                    stage(docs, base, n_source_files, "stream_agg_mart"))
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         # the mart's batch-id contract IS the replay skip: a
@@ -107,16 +83,5 @@ def stream_agg_mart(
             group_cols, value_col, f"bid-{batch_id}",
         )
 
-    with scoped_shuffle_partitions(spark, state_partitions):
-        query = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation", str(base / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(timeout_sec):
-            query.stop()
-            raise TimeoutError(
-                f"stream_agg_mart did not finish within "
-                f"{timeout_sec}s")
+    run(stream, "stream_agg_mart", land, base)
     return agg_mart_stats(spark, mart_dir, group_cols)

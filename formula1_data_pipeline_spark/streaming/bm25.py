@@ -17,9 +17,9 @@ query-equivalent to the one-shot build for ANY split of the corpus —
 ``bm25_index_topk`` returns row-identical rankings (the q39
 ``bm25_idx`` contract composed with the stream).
 
-Re-delivery safety scope (shared with aggmart/heavyhitters/
-histogram): the checkpoint location is STABLE (``work_dir/ckpt``)
-and the source staging is written ONCE under an order-free
+Re-delivery safety scope (shared with every staged leg): the
+checkpoint location is STABLE (``work_dir/ckpt``) and the source
+staging is written ONCE under ``scaffold.stage``'s order-free
 content-fingerprint guard — a re-call against the same ``work_dir``
 with a CHANGED corpus raises loudly rather than silently replaying
 old staging under recycled batch ids. Continuous ingestion is the
@@ -43,14 +43,13 @@ import pathlib
 from pyspark.sql import DataFrame, SparkSession
 
 from formula1_data_pipeline_spark.scratch import scratch_dir
+from formula1_data_pipeline_spark.streaming.scaffold import run, source, stage
 
 
 def stream_bm25_index(
     spark: SparkSession,
     documents_path: str,
     n_source_files: int = 3,
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
     work_dir: str | None = None,
     compact: bool = True,
 ) -> str:
@@ -68,56 +67,21 @@ def stream_bm25_index(
         bm25_index_append,
         bm25_index_compact,
     )
-    from formula1_data_pipeline_spark.streaming.confs import (
-        scoped_shuffle_partitions,
-    )
-    from formula1_data_pipeline_spark.streaming.scaffold import (
-        content_fingerprint,
-    )
 
     docs = (spark.read.parquet(documents_path)
             .select("doc_id", "text"))
     base = pathlib.Path(work_dir if work_dir is not None
                         else scratch_dir(prefix="stream_bm25_"))
-    src_dir = str(base / "src")
     index_dir = str(base / "idx")
-    if (base / "src").exists():
-        staged_fp = content_fingerprint(spark.read.parquet(src_dir))
-        if staged_fp != content_fingerprint(docs):
-            raise ValueError(
-                "stream_bm25_index: work_dir holds a staging of a "
-                f"different corpus (fingerprint {staged_fp} vs "
-                f"{content_fingerprint(docs)}) — this entry point "
-                "replays a FIXED snapshot; use a fresh work_dir, or "
-                "append the delta through bm25_index_append (the "
-                "incremental surface)")
-    else:
-        docs.repartition(n_source_files).write.parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
+    stream = source(spark, docs.schema,
+                    stage(docs, base, n_source_files, "stream_bm25_index"))
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         # replay skip is the index's own landed-doc anti-join: a
         # re-delivered batch's ids are all landed and index 0 docs
         bm25_index_append(batch_df.sparkSession, batch_df, index_dir)
 
-    with scoped_shuffle_partitions(spark, state_partitions):
-        query = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation", str(base / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(timeout_sec):
-            query.stop()
-            raise TimeoutError(
-                f"stream_bm25_index did not finish within "
-                f"{timeout_sec}s")
+    run(stream, "stream_bm25_index", land, base)
     if compact:
         # maintenance fold of the df/stats delta logs — results
         # invariant (readers sum deltas); lease-serialized

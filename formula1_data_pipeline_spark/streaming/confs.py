@@ -6,11 +6,13 @@ shuffle partition — fixed per-partition overhead that dominates a
 bounded AvailableNow replay on small backlogs: q35 measured 7.7 s at
 32 partitions vs 2.9 s at 8 on sf0.1. On a real cluster the right
 number scales with key cardinality and executor count (state must
-shard wide enough to spread across the fleet), so the override is a
-parameter, defaulting to a small value only for these local bounded
-replays. The previous session value is always restored — the conf is
-read at stream *planning* time, so restoring after awaitTermination
-can't affect the finished query.
+shard wide enough to spread across the fleet), so the override is one
+constant, ``STATE_PARTITIONS``, sized for these local bounded replays
+— a deployment sets it once for its cluster, not per call. Every
+replay runs through ``scaffold.run``, which also bounds it by
+``TIMEOUT_SEC``. The previous session value is always restored — the
+conf is read at stream *planning* time, so restoring once the query
+has ended can't affect it.
 
 Concurrency (round 14): independent streaming legs of one gate now
 run from driver threads (guide §2.6 back-fill — a bounded replay is
@@ -21,9 +23,10 @@ save/set/restore from two threads can interleave so that one thread
 plan. The scope is therefore reference-counted under a module lock:
 the first enter saves+sets, the last exit restores, and a thread
 requesting a DIFFERENT value blocks until the current scope fully
-unwinds (same value → share the scope). All in-repo replays use the
-same default (8), so sharing is the hot path and blocking is the
-loud-but-safe fallback.
+unwinds (same value → share the scope). All replays use the same
+``STATE_PARTITIONS``, so sharing is the hot path and blocking (e.g.
+against ``operators/cluster.py``'s own scope) is the loud-but-safe
+fallback.
 """
 
 from __future__ import annotations
@@ -32,6 +35,12 @@ import threading
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+#: shuffle partitions (= state-store instances) of every bounded
+#: replay — the q35 measurement above
+STATE_PARTITIONS = 8
+#: seconds ``scaffold.run`` waits before it stops a replay and raises
+TIMEOUT_SEC = 300
 
 _LOCK = threading.Condition()
 #: session-id -> [depth, active value, saved previous value,

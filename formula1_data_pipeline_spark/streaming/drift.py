@@ -19,12 +19,12 @@ and one manifest append. The reference is never rescanned.
 from __future__ import annotations
 
 import pathlib
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from formula1_data_pipeline_spark.scratch import scratch_dir
+from formula1_data_pipeline_spark.streaming.scaffold import run, source
 
 
 def drift_vs_reference_counts(
@@ -81,9 +81,6 @@ def stream_drift_monitor(
     reference: DataFrame,
     cols: list[str],
     n_source_files: int = 3,
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
-    work_dir: str | None = None,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Replay the parquet table at ``documents_path`` as a file
@@ -101,10 +98,9 @@ def stream_drift_monitor(
     import pyarrow.parquet as pq
 
     docs = spark.read.parquet(documents_path)
-    base = pathlib.Path(work_dir if work_dir is not None
-                        else scratch_dir(prefix="stream_drift_"))
+    base = pathlib.Path(scratch_dir(prefix="stream_drift_"))
     src_dir = base / "src"
-    src_dir.mkdir(parents=True, exist_ok=True)
+    src_dir.mkdir()
     landing = str(base / "monitor")
     # one file per deterministic slice, ordered names: the file
     # source discovers and triggers them in path order, so batch i
@@ -121,19 +117,11 @@ def stream_drift_monitor(
         read_table,
         txn_append,
     )
-    from formula1_data_pipeline_spark.streaming.confs import (
-        scoped_shuffle_partitions,
-    )
 
     ref_counts = value_counts_long(reference, cols).persist()
     ref_total = reference.count()
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(src_dir))
-    )
+    stream = source(spark, docs.schema, str(src_dir))
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         summary = drift_vs_reference_counts(
@@ -150,20 +138,7 @@ def stream_drift_monitor(
         )
 
     try:
-        with scoped_shuffle_partitions(spark, state_partitions):
-            query = (
-                stream.writeStream.foreachBatch(land)
-                .option("checkpointLocation",
-                        str(base / f"ckpt_{uuid.uuid4().hex[:8]}"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not query.awaitTermination(timeout_sec):
-                query.stop()
-                raise TimeoutError(
-                    f"stream_drift_monitor did not finish within "
-                    f"{timeout_sec}s"
-                )
+        run(stream, "stream_drift_monitor", land, base)
     finally:
         ref_counts.unpersist()
     return read_table(spark, landing)

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from formula1_data_pipeline_spark.streaming.scaffold import file_stream, run
+
 
 def stream_static_join_agg(
     spark: SparkSession,
@@ -24,18 +26,11 @@ def stream_static_join_agg(
     dim: DataFrame,
     dim_key: str,
     dim_attr: str,
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Replay ``events`` as a file stream, inner-join each micro-batch
     to the static ``dim`` on ``user_id == dim_key``, aggregate counts
     and a decimal-exact value sum per (dim_attr, event_type); complete
     mode + AvailableNow returns the final table."""
-    from formula1_data_pipeline_spark.streaming.scaffold import (
-        file_stream,
-        run_available_now,
-    )
-
     stream = file_stream(spark, events_path)
 
     joined = stream.join(
@@ -48,7 +43,4 @@ def stream_static_join_agg(
         .alias("sum_value"),
     )
 
-    return run_available_now(
-        agg, output_mode="complete", timeout_sec=timeout_sec,
-        state_partitions=state_partitions, name_prefix="enriched",
-    )
+    return run(agg, "stream_static_join_agg", output_mode="complete")

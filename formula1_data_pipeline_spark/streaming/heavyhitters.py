@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from formula1_data_pipeline_spark.scratch import scratch_dir
+from formula1_data_pipeline_spark.streaming.scaffold import run, source, stage
 
 
 def read_cms_state(spark: SparkSession, counters_path: str) -> DataFrame:
@@ -67,8 +68,6 @@ def stream_cms_counters(
     d: int = 4,
     w_bits: int = 14,
     n_source_files: int = 3,
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
     work_dir: str | None = None,
 ) -> DataFrame:
     """Replay ``documents`` as a file stream of ``n_source_files``
@@ -88,48 +87,16 @@ def stream_cms_counters(
         read_table,
         txn_append,
     )
-    from formula1_data_pipeline_spark.streaming.confs import (
-        scoped_shuffle_partitions,
-    )
 
     docs = spark.read.parquet(documents_path).select("doc_id", "text")
     base = pathlib.Path(work_dir if work_dir is not None
                         else scratch_dir(prefix="stream_cms_"))
-    src_dir = str(base / "src")
     counters_path = str(base / "counters")
-    # arbitrary (hash) split into files: the convergence contract is
-    # exactly that the merged state doesn't depend on this split.
-    # Staged ONCE — a stable staging (with the stable checkpoint
-    # below) is what makes a re-delivered batch id carry the same
-    # content, the premise of the bid skip. Rewriting it here would
-    # re-order files under recycled bids and silently corrupt the
-    # merge; a changed corpus against old state raises instead.
-    if (base / "src").exists():
-        # CONTENT fingerprint, not a bare count: a changed corpus
-        # with the same cardinality must raise, not silently replay
-        # the old staging (round-10 ADVICE)
-        from formula1_data_pipeline_spark.streaming.scaffold import (
-            content_fingerprint,
-        )
-
-        staged_fp = content_fingerprint(spark.read.parquet(src_dir))
-        if staged_fp != content_fingerprint(docs):
-            raise ValueError(
-                "stream_cms_counters: work_dir holds a staging of a "
-                f"different corpus (fingerprint {staged_fp} vs "
-                f"{content_fingerprint(docs)}) — this entry point "
-                "replays a FIXED snapshot; use a fresh work_dir, or "
-                "append the delta through cms_counters + txn_append "
-                "(the incremental surface)")
-    else:
-        docs.repartition(n_source_files).write.parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
+    # staged ONCE — a stable staging (with the stable checkpoint) is
+    # what makes a re-delivered batch id carry the same content, the
+    # premise of the bid skip below
+    stream = source(spark, docs.schema,
+                    stage(docs, base, n_source_files, "stream_cms_counters"))
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         bspark = batch_df.sparkSession
@@ -150,24 +117,10 @@ def stream_cms_counters(
         ).withColumn("bid", F.lit(batch_id))
         txn_append(bspark, seg, counters_path)
 
-    with scoped_shuffle_partitions(spark, state_partitions):
-        # STABLE checkpoint: Structured Streaming's batch-id replay
-        # guarantee (same id -> same files) only holds across a kept
-        # checkpoint, and it is what makes the bid skip sound; a
-        # per-call random suffix would also litter one orphaned
-        # checkpoint tree per invocation in durable storage
-        query = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation", str(base / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(timeout_sec):
-            query.stop()
-            raise TimeoutError(
-                f"stream_cms_counters did not finish within "
-                f"{timeout_sec}s"
-            )
+    # STABLE checkpoint (base/ckpt): Structured Streaming's batch-id
+    # replay guarantee (same id -> same files) only holds across a
+    # kept checkpoint, and it is what makes the bid skip sound
+    run(stream, "stream_cms_counters", land, base)
     return read_cms_state(spark, counters_path)
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from formula1_data_pipeline_spark.scratch import scratch_dir
+from formula1_data_pipeline_spark.streaming.scaffold import run, source, stage
 
 
 def read_histogram_state(spark: SparkSession,
@@ -52,8 +53,6 @@ def stream_quantile_histogram(
     sub_bits: int = 3,
     scale: int = 6,
     n_source_files: int = 3,
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
     work_dir: str | None = None,
 ) -> DataFrame:
     """Replay ``events_path`` as a file stream of ``n_source_files``
@@ -69,42 +68,15 @@ def stream_quantile_histogram(
         read_table,
         txn_append,
     )
-    from formula1_data_pipeline_spark.streaming.confs import (
-        scoped_shuffle_partitions,
-    )
 
     group_cols = list(group_cols or [])
     src = spark.read.parquet(events_path).select(
         *group_cols, value_col)
     base = pathlib.Path(work_dir if work_dir is not None
                         else scratch_dir(prefix="stream_hist_"))
-    src_dir = str(base / "src")
     hist_path = str(base / "hist")
-    if (base / "src").exists():
-        # CONTENT fingerprint, not a bare count (round-10 ADVICE —
-        # same-cardinality drift must raise, not silently replay)
-        from formula1_data_pipeline_spark.streaming.scaffold import (
-            content_fingerprint,
-        )
-
-        staged_fp = content_fingerprint(spark.read.parquet(src_dir))
-        if staged_fp != content_fingerprint(src):
-            raise ValueError(
-                "stream_quantile_histogram: work_dir holds a staging "
-                f"of a different table (fingerprint {staged_fp} vs "
-                f"{content_fingerprint(src)}) — this entry point "
-                "replays a FIXED snapshot; use a fresh work_dir, or "
-                "append deltas through quantile_histogram + "
-                "txn_append")
-    else:
-        src.repartition(n_source_files).write.parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(src.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
+    stream = source(spark, src.schema, stage(
+        src, base, n_source_files, "stream_quantile_histogram"))
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         bspark = batch_df.sparkSession
@@ -123,17 +95,5 @@ def stream_quantile_histogram(
         ).withColumn("bid", F.lit(batch_id))
         txn_append(bspark, seg, hist_path)
 
-    with scoped_shuffle_partitions(spark, state_partitions):
-        query = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation", str(base / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(timeout_sec):
-            query.stop()
-            raise TimeoutError(
-                f"stream_quantile_histogram did not finish within "
-                f"{timeout_sec}s"
-            )
+    run(stream, "stream_quantile_histogram", land, base)
     return read_histogram_state(spark, hist_path, group_cols)

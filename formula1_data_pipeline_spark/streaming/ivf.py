@@ -22,7 +22,7 @@ over the streamed state is row-identical to ``ivf_flat_topk``.
 LANDING ROUTE: rides q88's r13 re-gate (streaming ingestion
 surface; r11-gated, due r13) as kind='ivf_stream' rows — the topk
 from the STREAMED index, replaying the q34 hash-sample-quantizer
-oracle. Draft: tests/test_r15_gate_drafts.py.
+oracle.
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ import pathlib
 from pyspark.sql import DataFrame, SparkSession
 
 from formula1_data_pipeline_spark.scratch import scratch_dir
+from formula1_data_pipeline_spark.streaming.scaffold import run, source, stage
 
 
 def stream_ivf_append(
@@ -42,8 +43,6 @@ def stream_ivf_append(
     n_assign: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
     work_dir: str | None = None,
 ) -> None:
     """Replay ``embeddings_path`` as a file stream of
@@ -60,39 +59,14 @@ def stream_ivf_append(
         _check_consistent,
         ivf_index_append,
     )
-    from formula1_data_pipeline_spark.streaming.confs import (
-        scoped_shuffle_partitions,
-    )
-    from formula1_data_pipeline_spark.streaming.scaffold import (
-        content_fingerprint,
-    )
 
     _check_consistent(spark, index_dir)  # refuse a partial index
     emb = (spark.read.parquet(embeddings_path)
            .select(id_col, vec_col))
     base = pathlib.Path(work_dir if work_dir is not None
                         else scratch_dir(prefix="stream_ivf_"))
-    src_dir = str(base / "src")
-    if (base / "src").exists():
-        staged_fp = content_fingerprint(
-            spark.read.parquet(src_dir))
-        if staged_fp != content_fingerprint(emb):
-            raise ValueError(
-                "stream_ivf_append: work_dir holds a staging of a "
-                f"different corpus (fingerprint {staged_fp} vs "
-                f"{content_fingerprint(emb)}) — this entry point "
-                "replays a FIXED snapshot; use a fresh work_dir, or "
-                "append the delta through ivf_index_append (the "
-                "incremental surface)")
-    else:
-        emb.repartition(n_source_files).write.parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
+    stream = source(spark, emb.schema,
+                    stage(emb, base, n_source_files, "stream_ivf_append"))
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         # no bid bookkeeping: the landed-id skip IS the replay (and
@@ -102,15 +76,4 @@ def stream_ivf_append(
             n_assign=n_assign, id_col=id_col, vec_col=vec_col,
         )
 
-    with scoped_shuffle_partitions(spark, state_partitions):
-        query = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation", str(base / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(timeout_sec):
-            query.stop()
-            raise TimeoutError(
-                f"stream_ivf_append did not finish within "
-                f"{timeout_sec}s")
+    run(stream, "stream_ivf_append", land, base)

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from formula1_data_pipeline_spark.streaming.scaffold import file_stream, run
+
 
 def stream_stream_interval_join(
     spark: SparkSession,
@@ -39,19 +41,12 @@ def stream_stream_interval_join(
     right_type: str = "purchase",
     window: str = "6 hours",
     watermark: str = "12 hours",
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Replay ``events`` as TWO file streams split by event_type and
     interval-join them: for each ``right_type`` row, every
     ``left_type`` row of the same user with
     ``left.ts <= right.ts < left.ts + window``. Returns the joined
     pairs (append mode, AvailableNow)."""
-    from formula1_data_pipeline_spark.streaming.scaffold import (
-        file_stream,
-        run_available_now,
-    )
-
     def side(event_type: str, prefix: str) -> DataFrame:
         s = file_stream(spark, events_path)
         return (
@@ -85,7 +80,4 @@ def stream_stream_interval_join(
         .alias("lag_micros"),
     )
 
-    return run_available_now(
-        joined, output_mode="append", timeout_sec=timeout_sec,
-        state_partitions=state_partitions, name_prefix="joined",
-    )
+    return run(joined, "stream_stream_interval_join")

@@ -29,12 +29,12 @@ call (the q83 lesson).
 from __future__ import annotations
 
 import pathlib
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from formula1_data_pipeline_spark.scratch import scratch_dir
+from formula1_data_pipeline_spark.streaming.scaffold import run, source, stage
 
 
 def stream_neardup_dedup(
@@ -42,15 +42,14 @@ def stream_neardup_dedup(
     documents_path: str,
     threshold: float = 0.8,
     n_source_files: int = 3,
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
     work_dir: str | None = None,
 ) -> DataFrame:
     """Replay ``documents`` as a file stream of ``n_source_files``
     micro-batches; return the landed verdict table (doc_id, kept).
 
-    ``work_dir``: where the seen-index, verdict table, and checkpoint
-    live — a deployment passes durable storage here; ``None`` uses a
+    ``work_dir``: where the staging, seen-index, verdict table, and
+    checkpoint live — a deployment passes durable storage here, and a
+    re-call on it resumes from the checkpoint; ``None`` uses a
     process-lifetime scratch dir (gates/tests)."""
     from formula1_data_pipeline_spark.operators.dedup import (
         _sig_agg,
@@ -63,26 +62,14 @@ def stream_neardup_dedup(
         read_table,
         txn_append,
     )
-    from formula1_data_pipeline_spark.streaming.confs import (
-        scoped_shuffle_partitions,
-    )
 
     docs = spark.read.parquet(documents_path).select("doc_id", "text")
     base = pathlib.Path(work_dir if work_dir is not None
                         else scratch_dir(prefix="stream_neardup_"))
-    src_dir = str(base / "src")
     idx_path = str(base / "seen_index")
     landing = str(base / "verdicts")
-    # arbitrary (hash) split into files: the convergence contract is
-    # exactly that the landed state doesn't depend on this split
-    docs.repartition(n_source_files).write.parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
+    stream = source(spark, docs.schema,
+                    stage(docs, base, n_source_files, "stream_neardup_dedup"))
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         bspark = batch_df.sparkSession
@@ -122,21 +109,5 @@ def stream_neardup_dedup(
             keys=["doc_id"], order=[F.col("kept").asc()],
         )
 
-    with scoped_shuffle_partitions(spark, state_partitions):
-        query = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation",
-                    str(base / f"ckpt_{uuid.uuid4().hex[:8]}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        # r6 review finding: an unchecked timeout would silently
-        # return a partially-landed verdict table and leak the
-        # still-running query (same guard as streaming/rest.py)
-        if not query.awaitTermination(timeout_sec):
-            query.stop()
-            raise TimeoutError(
-                f"stream_neardup_dedup did not finish within "
-                f"{timeout_sec}s"
-            )
+    run(stream, "stream_neardup_dedup", land, base)
     return read_table(spark, landing)

@@ -6,7 +6,7 @@ and delete+reloads the latest-session tables per poll
 already-gated pieces into that loop as Structured Streaming:
 
 - a **poll schedule** drives micro-batches: one tiny file per poll id,
-  replayed with ``maxFilesPerTrigger=1`` + ``Trigger.AvailableNow`` —
+  replayed one file per trigger with ``Trigger.AvailableNow`` —
   each micro-batch IS one poll tick. (In an unbounded deployment the
   clock is the trigger interval itself; the bounded file schedule is
   what makes the leg gateable.)
@@ -35,7 +35,6 @@ from __future__ import annotations
 import pathlib
 import threading
 import time
-import uuid
 from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -43,6 +42,7 @@ from pyspark.sql import functions as F
 
 from formula1_data_pipeline_spark.scratch import scratch_dir
 from formula1_data_pipeline_spark.sources.openf1 import OpenF1Client
+from formula1_data_pipeline_spark.streaming.scaffold import run, source
 
 
 class RateLimitedClient:
@@ -97,8 +97,6 @@ def stream_rest_ingest(
     keys: list[str],
     order: list[Column] | None = None,
     order_cols: list[str] | None = None,
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
 ) -> DataFrame | None:
     """Run ``n_polls`` REST polls as a bounded stream (one micro-batch
     per poll), landing each through the transactional merge sink, and
@@ -117,9 +115,9 @@ def stream_rest_ingest(
         records_to_raw_df,
     )
     from formula1_data_pipeline_spark.sources.sinks import merge_upsert
-    from formula1_data_pipeline_spark.sources.txn import read_table
-    from formula1_data_pipeline_spark.streaming.confs import (
-        scoped_shuffle_partitions,
+    from formula1_data_pipeline_spark.sources.txn import (
+        is_txn_table,
+        read_table,
     )
 
     if order is None:
@@ -140,12 +138,7 @@ def stream_rest_ingest(
         .write.parquet(str(schedule_dir))
     )
 
-    stream = (
-        spark.readStream.schema("poll int")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(schedule_dir))
-    )
+    stream = source(spark, "poll int", str(schedule_dir))
 
     def poll_and_land(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -164,25 +157,7 @@ def stream_rest_ingest(
             merge_upsert(sess, df, landing, keys=keys, order=order,
                          order_cols=order_cols)
 
-    with scoped_shuffle_partitions(spark, state_partitions):
-        query = (
-            stream.writeStream.foreachBatch(poll_and_land)
-            .option("checkpointLocation",
-                    str(base / f"ckpt_{uuid.uuid4().hex[:8]}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(timeout_sec):
-            # returning a partially-landed table while the query keeps
-            # writing behind the reader's back would be silent data
-            # corruption — stop it and fail loudly instead
-            query.stop()
-            raise TimeoutError(
-                f"stream_rest_ingest: {n_polls}-poll replay did not "
-                f"finish within {timeout_sec}s"
-            )
-    from formula1_data_pipeline_spark.sources.txn import is_txn_table
-
+    run(stream, "stream_rest_ingest", poll_and_land, base)
     if not is_txn_table(spark, landing):
         return None  # every poll was empty — the S3 short-circuit
     return read_table(spark, landing)

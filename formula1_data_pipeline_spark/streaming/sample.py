@@ -17,8 +17,9 @@ of the document SET.
 Replay safety: the fold is VALUE-LEVEL IDEMPOTENT (min-selection of
 already-present rows changes nothing — the HLL discipline), so a
 re-delivered micro-batch needs no batch-id machinery; the stable
-checkpoint + stage-once content-fingerprint guard (shared with the
-other streaming maintainers) close the recycled-bid hazard anyway.
+checkpoint + ``scaffold.stage``'s content-fingerprint guard (shared
+with the other streaming maintainers) close the recycled-bid hazard
+anyway.
 
 Scale shape per micro-batch: one ``TakeOrderedAndProject`` over the
 batch (per-partition heap, no shuffle), then a (2k+2)-row union +
@@ -40,6 +41,7 @@ from pyspark.sql import functions as F
 
 from formula1_data_pipeline_spark.operators.sampling import md5_hash60
 from formula1_data_pipeline_spark.scratch import scratch_dir
+from formula1_data_pipeline_spark.streaming.scaffold import run, source, stage
 
 _STATE = "racers"
 
@@ -111,8 +113,6 @@ def stream_priority_sample(
     id_col: str = "doc_id",
     salt: str = "priosample-v1",
     n_source_files: int = 3,
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
     work_dir: str | None = None,
 ) -> DataFrame:
     """Replay ``documents`` as a file stream of ``n_source_files``
@@ -124,12 +124,6 @@ def stream_priority_sample(
     passes durable storage; ``None`` uses a process-lifetime scratch
     dir (gates/tests)."""
     from formula1_data_pipeline_spark.sources.txn import read_table
-    from formula1_data_pipeline_spark.streaming.confs import (
-        scoped_shuffle_partitions,
-    )
-    from formula1_data_pipeline_spark.streaming.scaffold import (
-        content_fingerprint,
-    )
 
     if k <= 0:
         raise ValueError(f"k must be positive: {k}")
@@ -137,42 +131,14 @@ def stream_priority_sample(
             .select(id_col, weight_col))
     base = pathlib.Path(work_dir if work_dir is not None
                         else scratch_dir(prefix="stream_priosample_"))
-    src_dir = str(base / "src")
     state_tbl = str(base / _STATE)
-    if (base / "src").exists():
-        staged_fp = content_fingerprint(spark.read.parquet(src_dir))
-        if staged_fp != content_fingerprint(docs):
-            raise ValueError(
-                "stream_priority_sample: work_dir holds a staging of "
-                f"a different corpus (fingerprint {staged_fp} vs "
-                f"{content_fingerprint(docs)}) — this entry point "
-                "replays a FIXED snapshot; use a fresh work_dir")
-    else:
-        docs.repartition(n_source_files).write.parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
+    stream = source(spark, docs.schema, stage(
+        docs, base, n_source_files, "stream_priority_sample"))
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         _fold_batch(batch_df, state_tbl, weight_col, k, id_col, salt)
 
-    with scoped_shuffle_partitions(spark, state_partitions):
-        query = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation", str(base / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(timeout_sec):
-            query.stop()
-            raise TimeoutError(
-                f"stream_priority_sample did not finish within "
-                f"{timeout_sec}s")
-
+    run(stream, "stream_priority_sample", land, base)
     state = read_table(spark, state_tbl)
     w_rank = Window.orderBy(F.col("r").asc(), F.col("id").asc())
     ranked = state.withColumn("prio_rank",

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from formula1_data_pipeline_spark.streaming.scaffold import file_stream, run
+
 STATE_SCHEMA = StructType().add("seen", ArrayType(LongType()))
 
 
@@ -87,8 +89,6 @@ def stateful_first_seen(
 def stream_stateful_dedup(
     spark: SparkSession,
     events_path: str,
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Run ``stateful_first_seen`` over the events table as a real
     Structured Streaming query (file source -> applyInPandasWithState
@@ -100,15 +100,7 @@ def stream_stateful_dedup(
     a live unbounded stream the same operator keeps emitting only
     never-before-seen subkeys, state bounded by subkey cardinality.
     """
-    from formula1_data_pipeline_spark.streaming.scaffold import (
-        file_stream,
-        run_available_now,
-    )
-
     deduped = stateful_first_seen(file_stream(spark, events_path))
-    # state-store instances scale with shuffle partitions (see confs):
-    # size them to the bounded replay, not the session default
-    return run_available_now(
-        deduped, output_mode="append", timeout_sec=timeout_sec,
-        state_partitions=state_partitions, name_prefix="first_seen",
-    )
+    # state-store instances scale with shuffle partitions: run sizes
+    # them to the bounded replay, not the session default (confs.py)
+    return run(deduped, "stream_stateful_dedup")

@@ -30,54 +30,42 @@ transactional format's MERGE does the same via file-level pruning).
 
 from __future__ import annotations
 
-import pathlib
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from formula1_data_pipeline_spark.scratch import scratch_dir
+from formula1_data_pipeline_spark.streaming.scaffold import run, source, stage
 
 
 def stream_merge_upsert(
     spark: SparkSession,
     events_path: str,
     n_source_files: int = 4,
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Replay ``events`` as a file stream of ``n_source_files``
-    micro-batches (maxFilesPerTrigger=1), landing each through
+    micro-batches (one file per batch), landing each through
     ``merge_upsert`` keyed by (user_id, event_type) with
     latest-event-wins priority; return the landed table.
     """
-    from formula1_data_pipeline_spark.sources.sinks import merge_upsert
-
     from formula1_data_pipeline_spark.functions.timestamps import (
         normalize_event_ts,
         read_parquet_maybe_nanos,
     )
+    from formula1_data_pipeline_spark.sources.sinks import merge_upsert
+    from formula1_data_pipeline_spark.sources.txn import read_table
 
     # read_parquet_maybe_nanos: loud one-time conf fallback only if
     # the footer is TIMESTAMP(NANOS), matching queries.load
     ev = normalize_event_ts(read_parquet_maybe_nanos(spark, events_path))
     ev = ev.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
 
-    base = pathlib.Path(scratch_dir(prefix="stream_upsert_"))
-    src_dir = str(base / "src")
-    landing = str(base / "latest_events")
-    # split the bounded input into several files so AvailableNow +
-    # maxFilesPerTrigger=1 genuinely exercises multi-batch merging
-    ev.repartition(n_source_files).write.parquet(src_dir)
-
-    # the stream reads back what we just wrote — its schema IS ev's
-    # (already ts-normalized), no footer probe job needed
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
+    base = scratch_dir(prefix="stream_upsert_")
+    landing = f"{base}/latest_events"
+    # several files so AvailableNow genuinely exercises multi-batch
+    # merging; the stream reads back what was just written, so its
+    # schema IS ev's (already ts-normalized) — no footer probe job
+    stream = source(spark, ev.schema,
+                    stage(ev, base, n_source_files, "stream_merge_upsert"))
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         # priority is intrinsic (ts, event_id), so replaying or
@@ -93,21 +81,5 @@ def stream_merge_upsert(
             ],
         )
 
-    from formula1_data_pipeline_spark.streaming.confs import (
-        scoped_shuffle_partitions,
-    )
-
-    # per-batch merge jobs (dedup window + staged rewrite) plan during
-    # the stream, so the override spans awaitTermination (confs.py)
-    with scoped_shuffle_partitions(spark, state_partitions):
-        query = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation",
-                    str(base / f"ckpt_{uuid.uuid4().hex[:8]}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(timeout_sec)
-    from formula1_data_pipeline_spark.sources.txn import read_table
-
+    run(stream, "stream_merge_upsert", land, base)
     return read_table(spark, landing)

@@ -22,14 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from formula1_data_pipeline_spark.streaming.scaffold import file_stream, run
+
 
 def stream_windowed_agg(
     spark: SparkSession,
     events_path: str,
     window_duration: str = "1 hour",
     watermark_delay: str = "10 minutes",
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Run the windowed count/sum aggregation over ``events`` as a real
     Structured Streaming query (AvailableNow → memory sink) and return
@@ -40,11 +40,6 @@ def stream_windowed_agg(
     would still be merged, the semantic the reference approximates with
     its delete+reload (S6).
     """
-    from formula1_data_pipeline_spark.streaming.scaffold import (
-        file_stream,
-        run_available_now,
-    )
-
     stream = file_stream(spark, events_path)
 
     agg = (
@@ -66,7 +61,4 @@ def stream_windowed_agg(
     )
 
     # window-agg state shards one store per shuffle partition (confs.py)
-    return run_available_now(
-        agg, output_mode="append", timeout_sec=timeout_sec,
-        state_partitions=state_partitions, name_prefix="windowed",
-    )
+    return run(agg, "stream_windowed_agg")

@@ -270,6 +270,25 @@ def test_stream_merge_upsert_batch_split_invariant(spark):
     assert len(keys) == len(four) > 0
 
 
+def test_replay_timeout_stops_query_and_raises(spark, monkeypatch):
+    """A replay that outlives the timeout must stop its query and
+    raise, on the foreachBatch path (merge-upsert) and on the
+    memory-sink path (windowed agg) alike — never return a partly
+    landed table with the query still writing behind the reader."""
+    from formula1_data_pipeline_spark.streaming import (
+        confs,
+        stream_merge_upsert,
+        stream_windowed_agg,
+    )
+
+    path = "/root/testdata/sf0.001/events.parquet"
+    monkeypatch.setattr(confs, "TIMEOUT_SEC", 0.01)
+    for replay in (stream_merge_upsert, stream_windowed_agg):
+        with pytest.raises(TimeoutError, match=replay.__name__):
+            replay(spark, path)
+        assert spark.streams.active == []
+
+
 def test_records_to_raw_df_restores_arrow_conf(spark):
     """The eager pandas->LocalRelation conversion needs Arrow on, but
     an externally supplied session must get its own conf value back —

@@ -26,15 +26,6 @@ an r12 host's window is tight, both targets re-gate again in r14.
     variance above the isotropic floor) — the HLL est_ok
     discipline. LANDING ROUTE: q24's r12 re-gate, kind='pca' row.
 
-  * streaming aggregate-mart maintenance
-    (``streaming/aggmart.py::stream_agg_mart`` — foreachBatch folds
-    each micro-batch through ``agg_mart_append``; the stream's
-    batch id IS the mart's exactly-once batch id, and the
-    distributive fold makes the landed stats bit-for-bit the
-    one-shot groupBy for any split). LANDING ROUTE: rides whichever
-    of q31/q54's r12 streaming re-gates the streaming histogram
-    does not take, as kind='aggmart_stream' rows.
-
   * dataset version diff (``operators/diff.py::dataset_diff`` —
     added/removed/changed via one null-safe hash-compare full outer
     join; the readable face of time travel, and ``txn_delete_keys``'
@@ -173,23 +164,6 @@ _PCA_ORACLE = """
 SELECT 'pca' AS kind, TRUE AS eig_desc_ok, TRUE AS orthonormal_ok,
        TRUE AS variance_floor_ok, TRUE AS mart_matches_one_shot_ok
 """
-
-#: the streaming-mart rider leg (rides whichever of q31/q54's r12
-#: streaming re-gates the streaming histogram does not take): the
-#: convergence contract makes the landed stream state answer the
-#: SAME oracle as the batch mart at the stored grain.
-_STREAM_AGGMART_ORACLE = """
-SELECT 'aggmart_stream' AS kind, source,
-       CAST(count(n_chars) AS BIGINT) AS n_rows,
-       CAST(sum(CAST(n_chars AS BIGINT)) AS BIGINT) AS sum_value,
-       CAST(min(n_chars) AS BIGINT) AS min_value,
-       CAST(max(n_chars) AS BIGINT) AS max_value,
-       CAST(sum(CAST(n_chars AS BIGINT)) AS DOUBLE)
-         / CAST(count(n_chars) AS DOUBLE) AS mean_value
-FROM documents WHERE n_chars IS NOT NULL
-GROUP BY source
-"""
-
 
 def _diff_oracle() -> str:
     """q75 rider kind='diff': documents vs a deterministic mutation
@@ -334,26 +308,6 @@ def test_draft_aggmart_kind(spark, sf_dir, tmp_path):
         "min_value", "max_value", "mean_value", "var_pop", "stddev_pop",
     )
     _compare(out, _AGGMART_ORACLE, sf_dir)
-
-
-@pytest.mark.parametrize("sf_dir", SFS)
-def test_draft_stream_aggmart_kind(spark, sf_dir):
-    from formula1_data_pipeline_spark.scratch import scratch_dir
-    from formula1_data_pipeline_spark.streaming.aggmart import (
-        stream_agg_mart,
-    )
-
-    sf_tag = sf_dir.rsplit("sf", 1)[-1]
-    got = stream_agg_mart(
-        spark, f"{sf_dir}/documents.parquet", ["source"], "n_chars",
-        work_dir=scratch_dir(prefix=f"gate_sam_{sf_tag}_"),
-    )
-    out = got.select(
-        F.lit("aggmart_stream").alias("kind"), "source", "n_rows",
-        F.col("sum_value").cast("long").alias("sum_value"),
-        "min_value", "max_value", "mean_value",
-    )
-    _compare(out, _STREAM_AGGMART_ORACLE, sf_dir)
 
 
 @pytest.mark.parametrize("sf_dir", SFS)

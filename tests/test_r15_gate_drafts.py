@@ -276,111 +276,6 @@ def test_draft_mmr_kind(spark, sf_dir):
 
 
 # --------------------------------------------------------------------
-# Streaming IVF-index maintenance (streaming/ivf.py, round 12) — the
-# embedding-ingestion streaming leg. LANDING ROUTE: rides q88's r13
-# re-gate (streaming ingestion surface; r11-gated, due r13) as
-# kind='ivf_stream' rows: topk from the STREAMED index (build over
-# the head third + a 2-file streamed tail, frozen hash-sample
-# quantizer) must replay the q34 live-IVF oracle row-for-row — the
-# build+append==one-shot contract composed with the stream.
-
-def _ivf_stream_oracle() -> str:
-    from formula1_data_pipeline_spark.queries_llm import _SQL_DOT
-
-    return f"""
-    WITH vecs AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-        FROM embeddings
-    ), cent AS (
-        SELECT vec_id, vec,
-               row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-               ) - 1 AS cluster,
-               sqrt({_SQL_DOT.format(a='vec', b='vec')}) AS cnorm
-        FROM vecs
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16
-    ), scores AS (
-        SELECT v.vec_id AS id, cent.cluster,
-               {_SQL_DOT.format(a='v.vec', b='cent.vec')}
-               / nullif(cent.cnorm, 0.0) AS score
-        FROM vecs v CROSS JOIN cent
-    ), assign_c AS (
-        SELECT id, cluster FROM (
-            SELECT id, cluster, row_number() OVER (
-                PARTITION BY id ORDER BY score DESC, cluster ASC
-            ) AS crank FROM scores
-        ) WHERE crank <= 3
-    ), probes AS (
-        SELECT id, cluster FROM (
-            SELECT id, cluster, row_number() OVER (
-                PARTITION BY id ORDER BY score DESC, cluster ASC
-            ) AS crank FROM scores WHERE id < 10
-        ) WHERE crank <= 4
-    ), scored AS (
-        SELECT DISTINCT q.id AS q_id, c.id AS n_id,
-               round(
-                   {_SQL_DOT.format(a='qv.vec', b='cv.vec')}
-                   / nullif(sqrt({_SQL_DOT.format(a='qv.vec', b='qv.vec')})
-                            * sqrt({_SQL_DOT.format(a='cv.vec', b='cv.vec')}),
-                            0.0),
-               6) AS cos_sim
-        FROM probes q
-        JOIN assign_c c USING (cluster)
-        JOIN vecs qv ON qv.vec_id = q.id
-        JOIN vecs cv ON cv.vec_id = c.id
-        WHERE q.id <> c.id
-    ), ranked AS (
-        SELECT q_id, n_id, cos_sim,
-               row_number() OVER (
-                   PARTITION BY q_id ORDER BY cos_sim DESC, n_id ASC
-               ) AS rank
-        FROM scored
-    )
-    SELECT 'ivf_stream' AS kind, q_id, n_id, cos_sim, rank
-    FROM ranked WHERE rank <= 5
-    """
-
-
-@pytest.mark.parametrize("sf_dir", SFS)
-def test_draft_ivf_stream_kind(spark, sf_dir, tmp_path):
-    from formula1_data_pipeline_spark.operators.similarity import (
-        _as_double,
-        _hash_sample_coefs,
-        norm,
-    )
-    from formula1_data_pipeline_spark.operators.vecindex import (
-        ivf_index_build,
-        ivf_index_topk,
-    )
-    from formula1_data_pipeline_spark.streaming.ivf import (
-        stream_ivf_append,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = emb.select(
-        F.col("vec_id").alias("id"),
-        _as_double(F.col("embedding")).alias("vec"),
-    ).withColumn("nrm", norm(F.col("vec")))
-    coefs = _hash_sample_coefs(base, 16)
-    mx = emb.agg(F.max("vec_id")).collect()[0][0]
-    idx = str(tmp_path / "idx")
-    ivf_index_build(spark, emb.filter(F.col("vec_id") <= mx // 3),
-                    idx, centroid_coefs=coefs, n_assign=3)
-    tail_path = str(tmp_path / "tail.parquet")
-    # the streamed tail OVERLAPS the built head (re-delivery under
-    # the gate) alongside the new rows
-    emb.filter(F.col("vec_id") > mx // 6).write.parquet(tail_path)
-    stream_ivf_append(spark, tail_path, idx, n_source_files=2,
-                      n_assign=3, work_dir=str(tmp_path / "w"))
-    out = ivf_index_topk(
-        spark, idx, emb.filter(F.col("vec_id") < 10),
-        k=5, n_probe=4,
-    ).select(F.lit("ivf_stream").alias("kind"), "*")
-    _compare(out, _ivf_stream_oracle(), sf_dir)
-
-
-# --------------------------------------------------------------------
 # Dedup-weighted sampling (sampling.py::dedup_weighted_sample, round
 # 12) — priority sampling at weight 1/near-dup-cluster-size, so every
 # cluster contributes equal expected mass however duplicated the raw

@@ -45,7 +45,7 @@ def test_stream_drift_monitor_matches_batch_per_slice(spark):
     n_files = 3
     landed = stream_drift_monitor(
         spark, f"{SF}/documents.parquet", ref, ["lang", "source"],
-        n_source_files=n_files, timeout_sec=300,
+        n_source_files=n_files,
     )
     got = sorted(
         (r["batch_id"], r["n_rows"], r["column"], r["n_values"],

@@ -85,6 +85,21 @@ def test_seen_index_stays_bounded_under_compaction(
     }
     assert got == _verdicts(spark, 1)
 
+    # a second call on the same work_dir resumes from its staging and
+    # checkpoint: no batch is left to land, so the verdicts are the
+    # same and the index gains no segment
+    again = stream_neardup_dedup(
+        spark, f"{SF}/documents.parquet", n_source_files=8,
+        work_dir=str(tmp_path),
+    )
+    assert {
+        r["doc_id"]: r["kept"]
+        for r in again.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            (F.col("kept") == "true").alias("kept"),
+        ).collect()
+    } == got
+
     idx = str(tmp_path / "seen_index")
     v = current_version(spark, idx)
     live = _live_dirs(_read_manifest(spark, idx, v)["segments"])
