@@ -22,6 +22,14 @@ requirement is *put-if-absent of one small object*:
   version N+1 in full, never a mix, because the manifest appears
   atomically and data files are immutable.
 
+Every write — append, replace, overwrite, delete, compact and merge —
+runs through ONE optimistic loop, ``_commit``: each op is an
+``attempt(v, manifest, stage)`` function the loop calls once per try,
+returning the segments to publish. The loop owns every data dir the
+attempts stage and, however it exits (publish, no-op, lost races or
+an exception), deletes the ones the published manifest does not
+reference, so a failed commit never leaks a copy of its batch.
+
 Put-if-absent per filesystem (pluggable — ``sources.stores``): local
 paths use ``os.link`` (POSIX hard link creation fails with EEXIST —
 atomic, and the content is fully written before the name appears);
@@ -249,10 +257,11 @@ def _data_files(spark: SparkSession, base: str,
 #
 # Per-segment min/max column stats — the manifest-level half of data
 # skipping (Delta/Iceberg file stats, at this protocol's granularity).
-# Stats are computed from a columnar read-back of the freshly staged
-# dir (scans only the stats columns, never re-runs the writer's plan)
-# and stored as plain JSON values; ``read_table(prune=...)`` drops
-# segments whose [min, max] cannot intersect the requested range.
+# ``_stage`` computes them while staging — observed inside the write
+# for unkeyed data, from a columnar read-back of the staged dir (only
+# the stats columns, never re-running the writer's plan) for keyed
+# data — and stores them as plain JSON values; ``read_table(prune=
+# ...)`` drops segments whose [min, max] cannot intersect the range.
 # Everything is fail-open: a segment with missing/unknown stats, a
 # type mismatch between a stored stat and a prune bound, or a
 # partition-dir name that does not round-trip (escaped chars, float
@@ -282,6 +291,23 @@ def _stat_val(v):
     return None
 
 
+def _minmax_aggs(cols: list[str]) -> list:
+    return [agg for c in cols
+            for agg in (F.min(c).alias(f"__mn_{c}"),
+                        F.max(c).alias(f"__mx_{c}"))]
+
+
+def _row_stats(row, cols: list[str]) -> dict:
+    """{col: [min, max]} from one ``_minmax_aggs`` row, keeping only the
+    columns whose both bounds have a faithful JSON value."""
+    st = {}
+    for c in cols:
+        mn, mx = _stat_val(row[f"__mn_{c}"]), _stat_val(row[f"__mx_{c}"])
+        if mn is not None and mx is not None:
+            st[c] = [mn, mx]
+    return st
+
+
 def _segment_stats(spark: SparkSession, staged: str, key: str | None,
                    stats_cols: list[str]) -> dict:
     """{partition_dir_value_or_None: {col: [min, max]}} for a staged
@@ -293,25 +319,13 @@ def _segment_stats(spark: SparkSession, staged: str, key: str | None,
     cols = [c for c in stats_cols if c in df.columns and c != key]
     if not cols:
         return {}
-    aggs = []
-    for c in cols:
-        aggs.append(F.min(c).alias(f"__mn_{c}"))
-        aggs.append(F.max(c).alias(f"__mx_{c}"))
     if key is None:
-        rows = [(None, df.agg(*aggs).collect()[0])]
+        rows = [(None, df.agg(*_minmax_aggs(cols)).collect()[0])]
     else:
-        rows = [(str(r[key]), r)
-                for r in df.groupBy(key).agg(*aggs).collect()]
-    out = {}
-    for part, r in rows:
-        st = {}
-        for c in cols:
-            mn, mx = _stat_val(r[f"__mn_{c}"]), _stat_val(r[f"__mx_{c}"])
-            if mn is not None and mx is not None:
-                st[c] = [mn, mx]
-        if st:
-            out[part] = st
-    return out
+        rows = [(str(r[key]), r) for r in
+                df.groupBy(key).agg(*_minmax_aggs(cols)).collect()]
+    return {part: st for part, r in rows
+            if (st := _row_stats(r, cols))}
 
 
 def _comparable(a, b) -> bool:
@@ -359,9 +373,7 @@ def _segment_may_match(seg: dict, key: str | None, prune: dict) -> bool:
 def _attach_stats(spark: SparkSession, table: str, segments: list[dict],
                   key: str | None, stats_cols: list[str]) -> None:
     """Compute and attach per-segment min/max stats for freshly staged
-    segments, in place (one columnar read-back of the staged dir).
-    Called once the effective stats columns are known — inside the
-    commit loop, from the manifest it reads anyway."""
+    segments, in place (one columnar read-back of the staged dir)."""
     from urllib.parse import unquote
 
     if not segments:
@@ -375,71 +387,60 @@ def _attach_stats(spark: SparkSession, table: str, segments: list[dict],
             seg["stats"] = stats[k]
 
 
+def _partition_segments(spark: SparkSession, base: str, d: str,
+                        key: str) -> list[dict]:
+    """One segment per ``key=value`` dir under ``base``, recorded as
+    living in data dir ``d`` ("." for the table root)."""
+    return [
+        {"dir": d,
+         # store the *encoded* dir-name value so replace/compare needs
+         # no escaping logic; basePath reads decode it
+         "partition": name[len(key) + 1:],
+         "files": _data_files(spark, base, name)}
+        for name, is_dir in sorted(_ls(spark, base))
+        if is_dir and name.startswith(f"{key}=")
+    ]
+
+
 def _stage(spark: SparkSession, df: DataFrame, table: str,
-           key: str | None,
-           observe_stats_cols: list[str] | None = None,
+           key: str | None, stats_cols: list[str] | None = None,
            ) -> tuple[str, list[dict]]:
     """Write ``df`` into a fresh uniquely-named data dir under the
     table root and return (dir name, segment entries). Data here is
     invisible to every reader until a manifest referencing it is
     published. The dir name is returned separately because an empty
     keyed batch stages ZERO segments while the directory still exists
-    on disk — callers need the name to clean up no-op commits.
+    on disk — the commit loop needs the name to clean it up.
 
-    ``observe_stats_cols`` (r15 optimization, guide §1.2 job-count):
-    for UNKEYED staging, compute the per-segment min/max column stats
-    via ``observe()`` INSIDE the staging write — the rows flow through
-    the writer anyway, so the stats cost zero extra jobs and the
-    ``_segment_stats`` read-back (one aggregate job per stats-bearing
-    commit) is skipped. min/max are idempotent under task retry /
-    speculation, so the observed values equal the read-back's
-    (parquet round-trips the stat-bearing types exactly). When the
-    stats are observed here, they are attached to the returned
-    segments directly. Keyed staging keeps the read-back (observe
-    cannot aggregate per partition value)."""
+    The segments carry min/max stats for ``stats_cols``. Unkeyed
+    staging observes them INSIDE the write (``observe()``: the rows
+    flow through the writer anyway, so the stats cost no extra job;
+    min/max are idempotent under task retry and parquet round-trips
+    the stat-bearing types exactly, so the values equal a read-back's).
+    Keyed staging reads the staged dir back (``_segment_stats``):
+    observe cannot aggregate per partition value."""
     obs = None
-    obs_cols: list[str] = []
-    if observe_stats_cols and key is None:
+    obs_cols = [c for c in stats_cols or () if c in df.columns]
+    if obs_cols and key is None:
         from pyspark.sql import Observation
 
-        obs_cols = [c for c in observe_stats_cols if c in df.columns]
-        if obs_cols:
-            obs = Observation()
-            aggs = []
-            for c in obs_cols:
-                aggs.append(F.min(c).alias(f"__mn_{c}"))
-                aggs.append(F.max(c).alias(f"__mx_{c}"))
-            df = df.observe(obs, *aggs)
+        obs = Observation()
+        df = df.observe(obs, *_minmax_aggs(obs_cols))
     d = f"d-{uuid.uuid4().hex[:12]}"
     writer = df.write.mode("errorifexists")
     if key is not None:
         writer = writer.partitionBy(key)
     writer.parquet(f"{table}/{d}")
-    if key is None:
-        seg = {"dir": d, "partition": None,
-               "files": _data_files(spark, f"{table}/{d}")}
-        if obs is not None:
-            row = obs.get
-            st = {}
-            for c in obs_cols:
-                mn = _stat_val(row[f"__mn_{c}"])
-                mx = _stat_val(row[f"__mx_{c}"])
-                if mn is not None and mx is not None:
-                    st[c] = [mn, mx]
-            if st:
-                seg["stats"] = st
-        return d, [seg]
-    segments = []
-    for name, is_dir in sorted(_ls(spark, f"{table}/{d}")):
-        if is_dir and name.startswith(f"{key}="):
-            segments.append({
-                "dir": d,
-                # store the *encoded* dir-name value so replace/compare
-                # needs no escaping logic; basePath reads decode it
-                "partition": name[len(key) + 1:],
-                "files": _data_files(spark, f"{table}/{d}", name),
-            })
-    return d, segments
+    if key is not None:
+        segments = _partition_segments(spark, f"{table}/{d}", d, key)
+        if stats_cols:
+            _attach_stats(spark, table, segments, key, stats_cols)
+        return d, segments
+    seg = {"dir": d, "partition": None,
+           "files": _data_files(spark, f"{table}/{d}")}
+    if obs is not None and (st := _row_stats(obs.get, obs_cols)):
+        seg["stats"] = st
+    return d, [seg]
 
 
 def _plain_entries(spark: SparkSession, table: str) -> list[tuple[str, bool]]:
@@ -489,15 +490,7 @@ def _bootstrap_segments(spark: SparkSession, table: str,
             f"keyed by {key!r}: entries {uncovered} do not belong to "
             "that partitioning and would be hidden from readers"
         )
-    segments = []
-    for name, is_dir in sorted(_ls(spark, table)):
-        if is_dir and name.startswith(f"{key}="):
-            segments.append({
-                "dir": ".",
-                "partition": name[len(key) + 1:],
-                "files": _data_files(spark, table, name),
-            })
-    return segments
+    return _partition_segments(spark, table, ".", key)
 
 
 # -------------------------------------------------------------- read --
@@ -603,63 +596,72 @@ def _segments_df(spark: SparkSession, table: str, key: str | None,
 _MAX_RETRIES = 20
 
 
-def _commit(spark: SparkSession, table: str, key: str | None,
-            next_segments, pre_publish_hook=None,
-            stats_cols: list[str] | None = None) -> int:
-    """Optimistic-concurrency commit loop: read current state, compute
-    the next segment list, publish put-if-absent; on conflict re-read
-    and retry. ``next_segments(version, old_segments, effective_stats)
-    -> list[dict]``. ``stats_cols`` None inherits the table's recorded
-    stats columns — resolved from the manifest this loop reads anyway,
-    so the common stats-less append pays no extra metadata round-trip.
-    ``pre_publish_hook`` runs between staging and each publish
-    attempt — a test seam to deterministically interleave a competing
-    commit, and the crash-recovery seam for compaction's pending-late
-    marker (operators/retrieval.py). A hook taking one parameter
-    receives the version this attempt would supersede (``None`` on
-    bootstrap); re-invoked per optimistic retry with the re-based
-    version, so the value the hook last saw always matches the
-    publish that finally lands."""
+def _commit(spark: SparkSession, table: str, attempt,
+            pre_publish_hook=None) -> int | None:
+    """The optimistic-concurrency loop every txn write runs through.
+
+    Per try: resolve the current version ``v`` and its manifest (both
+    ``None`` before the first commit), call ``attempt(v, manifest,
+    stage)``, run the pre-publish hook, and put-if-absent manifest
+    ``v + 1``; a lost race re-reads and tries again, up to
+    ``_MAX_RETRIES`` times. ``attempt`` returns ``(key, segments,
+    stats_cols)`` to publish, or any non-tuple value as the op's
+    finished result (published nothing). An empty first commit is a
+    no-op returning 0: a zero-segment v1 would crash every reader.
+
+    ``stage(df, key, stats_cols) -> segments`` is ``_stage`` with
+    the loop taking ownership of the data dir: on every exit (publish,
+    no-op, lost races or an exception) each staged dir the published
+    manifest does not reference is deleted, so a failed or superseded
+    attempt leaves no orphan for vacuum to age out.
+
+    ``pre_publish_hook`` runs before each publish attempt — a test seam
+    to deterministically interleave a competing commit, and the
+    crash-recovery seam for compaction's pending-late marker
+    (operators/retrieval.py). A hook taking one parameter receives the
+    version this attempt would supersede (``None`` on bootstrap), so
+    the value it last saw always matches the publish that lands."""
     import inspect
 
     hook_takes_version = (
         pre_publish_hook is not None
         and len(inspect.signature(pre_publish_hook).parameters) >= 1
     )
-    for _ in range(_MAX_RETRIES):
-        v = current_version(spark, table)
-        if v is None:
-            old = _bootstrap_segments(spark, table, key)
-            next_v = 1
-            inherited = None
-        else:
-            manifest = _read_manifest(spark, table, v)
-            if manifest["key"] != key:
-                raise ValueError(
-                    f"txn table {table} is keyed by {manifest['key']!r}, "
-                    f"got {key!r}"
-                )
-            old = manifest["segments"]
-            next_v = v + 1
-            inherited = manifest.get("stats_cols")
-        effective = stats_cols if stats_cols is not None else inherited
-        segments = next_segments(v, old, effective)
-        if next_v == 1 and not segments:
-            # A keyed append/replace of an empty first batch stages no
-            # partition dirs; publishing v1 with segments=[] would leave
-            # a table every reader crashes on. Appending nothing to a
-            # table that doesn't exist is a no-op: no version created.
-            return 0
-        if pre_publish_hook is not None:
-            if hook_takes_version:
-                pre_publish_hook(v)
-            else:
-                pre_publish_hook()
-        if _publish(spark, table, next_v, segments, key, effective):
-            return next_v
-    raise RuntimeError(
-        f"txn commit on {table}: lost {_MAX_RETRIES} optimistic races"
-    )
+    staged: list[str] = []
+    published: list[dict] = []
+
+    def stage(df, key, stats_cols):
+        d, segments = _stage(spark, df, table, key, stats_cols)
+        staged.append(d)
+        return segments
+
+    try:
+        for _ in range(_MAX_RETRIES):
+            v = current_version(spark, table)
+            manifest = None if v is None else _read_manifest(spark, table, v)
+            nxt = attempt(v, manifest, stage)
+            if not isinstance(nxt, tuple):
+                return nxt
+            key, segments, stats_cols = nxt
+            if v is None and not segments:
+                return 0
+            if pre_publish_hook is not None:
+                if hook_takes_version:
+                    pre_publish_hook(v)
+                else:
+                    pre_publish_hook()
+            next_v = 1 if v is None else v + 1
+            if _publish(spark, table, next_v, segments, key, stats_cols):
+                published = segments
+                return next_v
+        raise RuntimeError(
+            f"txn commit on {table}: lost {_MAX_RETRIES} optimistic races"
+        )
+    finally:
+        live = {s["dir"] for s in published}
+        for d in staged:
+            if d not in live:
+                _delete(spark, f"{table}/{d}")
 
 
 # Auto-compaction trigger: read_table unions one leg per distinct data
@@ -670,13 +672,13 @@ def _commit(spark: SparkSession, table: str, key: str | None,
 # commits (amortized ~1/threshold extra writes).
 AUTO_COMPACT_DIRS = 16
 
-# Automated retention: a successful ``txn_compact``/``txn_merge``
-# commit vacuums superseded state with these bounds, so a long-lived
-# table's disk footprint is maintained by its own write path instead
-# of a caller remembering to call ``vacuum``. The age floor keeps
-# every recently-SUPERSEDED version time-travelable (and protects
-# in-flight commits' staged dirs); raise KEEP_VERSIONS for longer
-# pinned history, set ``auto_vacuum=False`` per call to disable.
+# Automated retention: a committed ``txn_compact``/``txn_merge`` (and a
+# ``txn_overwrite(auto_vacuum=True)``) vacuums superseded state with
+# these bounds, so a long-lived table's disk footprint is maintained by
+# its own write path instead of a caller remembering to call
+# ``vacuum``. The age floor keeps every recently-SUPERSEDED version
+# time-travelable (and protects in-flight commits' staged dirs); raise
+# KEEP_VERSIONS for longer pinned history.
 # ``txn_merge`` only vacuums every EVERY-th version: a vacuum pass
 # stats one manifest per retained version, and merge is the hot path
 # of streaming foreachBatch landings — per-commit vacuuming there is
@@ -689,49 +691,55 @@ AUTO_VACUUM_MIN_AGE_SEC = 3600.0
 AUTO_VACUUM_EVERY = 16
 
 
+def _auto_vacuum(spark: SparkSession, table: str) -> None:
+    vacuum(spark, table, keep_versions=AUTO_VACUUM_KEEP_VERSIONS,
+           min_age_sec=AUTO_VACUUM_MIN_AGE_SEC)
+
+
 def _live_dirs(segments: list[dict]) -> int:
     return len({s["dir"] for s in segments})
 
 
-def _commit_staged(spark: SparkSession, df: DataFrame, table: str,
-                   key: str | None, merge_old, pre_publish_hook,
-                   compact_threshold: int | None,
-                   stats_cols: list[str] | None) -> int:
-    """Shared append/replace body: stage ``df``, run the optimistic
-    commit (attaching segment stats once the effective stats columns
-    are known from the manifest the loop reads), auto-compact past the
-    live-dir threshold, and clean up the staged dir when the commit
-    turns out to be a no-op (empty first batch) — otherwise the orphan
-    would sit unreclaimable until the table exists and vacuum ages it
-    out. ``merge_old(old_segments, staged) -> list[dict]``."""
-    # explicit stats_cols + unkeyed staging: the effective stats
-    # columns are known up front (an explicit argument overrides any
-    # inherited manifest value on every retry), so the stats ride the
-    # staging write itself via observe() — no read-back job (r15)
-    staged_dir, staged = _stage(spark, df, table, key,
-                                observe_stats_cols=stats_cols)
-    state: dict = {"attached": None, "segments": []}
-    if stats_cols is not None and key is None:
-        state["attached"] = sorted(stats_cols)
+def _commit_batch(spark: SparkSession, df: DataFrame, table: str,
+                  key: str | None, merge_old, pre_publish_hook,
+                  compact_threshold: int | None,
+                  stats_cols: list[str] | None) -> int:
+    """Shared append/replace/overwrite body. ``df`` is staged once, on
+    the first attempt — its staging does not depend on table state, so
+    a retry reuses it. Each attempt adopts a plain layout on bootstrap
+    or checks the manifest's key, re-attaches segment stats when the
+    effective stats columns (explicit, else inherited from the
+    manifest) differ from those staged — a concurrent winner may have
+    widened them — and publishes ``merge_old(old_segments, staged)``.
+    Auto-compacts past ``compact_threshold`` live dirs."""
+    staged = attached = None
+    segments: list[dict] = []
 
-    def nxt(v, old, effective):
-        # re-attach when a concurrent winner changed the table's
-        # stats_cols between our read and publish: the manifest we
-        # publish advertises ``effective``, so the staged segments
-        # must carry exactly those columns' stats
+    def attempt(v, manifest, stage):
+        nonlocal staged, attached, segments
+        if manifest is None:
+            old, inherited = _bootstrap_segments(spark, table, key), None
+        elif manifest["key"] != key:
+            raise ValueError(
+                f"txn table {table} is keyed by {manifest['key']!r}, "
+                f"got {key!r}"
+            )
+        else:
+            old, inherited = manifest["segments"], manifest.get("stats_cols")
+        if staged is None:
+            staged = stage(df, key, stats_cols)
+            attached = sorted(stats_cols) if stats_cols else None
+        effective = stats_cols if stats_cols is not None else inherited
         want = sorted(effective) if effective else None
-        if want and want != state["attached"]:
+        if want and want != attached:
             _attach_stats(spark, table, staged, key, want)
-            state["attached"] = want
-        state["segments"] = merge_old(old, staged)
-        return state["segments"]
+            attached = want
+        segments = merge_old(old, staged)
+        return key, segments, effective
 
-    ver = _commit(spark, table, key, nxt, pre_publish_hook, stats_cols)
-    if ver == 0:
-        _delete(spark, f"{table}/{staged_dir}")
-        return 0
-    if compact_threshold and \
-            _live_dirs(state["segments"]) >= compact_threshold:
+    ver = _commit(spark, table, attempt, pre_publish_hook)
+    if ver and compact_threshold and \
+            _live_dirs(segments) >= compact_threshold:
         txn_compact(spark, table)
     return ver
 
@@ -765,7 +773,7 @@ def txn_append(spark: SparkSession, df: DataFrame, table: str,
     the manifest (see ``read_table(prune=...)``); ``None`` keeps the
     table's previously recorded stats columns, so one writer opting in
     makes every later append/replace/compaction maintain the stats."""
-    return _commit_staged(
+    return _commit_batch(
         spark, df, table, key,
         lambda old, staged: old + staged,
         None, _compact_threshold(compact_threshold), stats_cols,
@@ -788,8 +796,8 @@ def txn_replace(spark: SparkSession, df: DataFrame, table: str,
         touched = {s["partition"] for s in staged}
         return [s for s in old if s["partition"] not in touched] + staged
 
-    return _commit_staged(spark, df, table, key, merge, pre_publish_hook,
-                          _compact_threshold(compact_threshold), stats_cols)
+    return _commit_batch(spark, df, table, key, merge, pre_publish_hook,
+                         _compact_threshold(compact_threshold), stats_cols)
 
 
 def txn_delete_keys(spark: SparkSession, keys_df: DataFrame,
@@ -828,7 +836,6 @@ def txn_delete_keys(spark: SparkSession, keys_df: DataFrame,
     column) — an empty keyed staging has no partition dirs, and an
     empty manifest would crash every reader; re-key with a keyed
     ``txn_overwrite`` when data returns."""
-    staged_dirs: list[str] = []
     if key_col in keys_df.columns:
         src_col = key_col
     elif len(keys_df.columns) == 1:
@@ -848,111 +855,89 @@ def txn_delete_keys(spark: SparkSession, keys_df: DataFrame,
     # delete-set plan would otherwise re-scan up to 2 * retries times.
     keys = (keys_df.select(F.col(src_col).alias("__k"))
             .filter(F.col("__k").isNotNull()).distinct().persist())
-    try:
-        for _ in range(_MAX_RETRIES):
-            v = current_version(spark, table)
-            if v is None:
-                raise ValueError(
-                    f"txn_delete_keys: {table} is not a manifest "
-                    "table; adopt it through a txn op first")
-            manifest = _read_manifest(spark, table, v)
-            key = manifest["key"]
-            segments = manifest["segments"]
-            scols = manifest.get("stats_cols")
-            ranges = []
-            for i, seg in enumerate(segments):
-                st = (seg.get("stats") or {}).get(key_col)
-                if st and _comparable(st[0], st[1]):
-                    ranges.append((i, st[0], st[1]))
-                else:
-                    ranges.append((i, None, None))  # fail-open: touch
-            # numeric stats compare in DECIMAL (a double cast of a
-            # >2^53 integer bound rounds, and a shrunken range could
-            # wrongly EXCLUDE a boundary segment — the one failure a
-            # delete must never make); string stats (string cols,
-            # ISO timestamps) compare lexicographically, which is
-            # their recorded ordering contract
-            numeric = all(
-                isinstance(x, (int, float)) or x is None
-                for _, a, b in ranges for x in (a, b))
-            if numeric:
-                rdf = spark.createDataFrame(
-                    [(i, str(a) if a is not None else None,
-                      str(b) if b is not None else None)
-                     for i, a, b in ranges],
-                    "seg_idx int, mn string, mx string",
-                ).select(
-                    "seg_idx",
-                    F.col("mn").cast("decimal(38,9)").alias("mn"),
-                    F.col("mx").cast("decimal(38,9)").alias("mx"),
-                )
+
+    def attempt(v, manifest, stage):
+        if manifest is None:
+            raise ValueError(
+                f"txn_delete_keys: {table} is not a manifest "
+                "table; adopt it through a txn op first")
+        key = manifest["key"]
+        segments = manifest["segments"]
+        scols = manifest.get("stats_cols")
+        ranges = []
+        for i, seg in enumerate(segments):
+            st = (seg.get("stats") or {}).get(key_col)
+            if st and _comparable(st[0], st[1]):
+                ranges.append((i, st[0], st[1]))
             else:
-                rdf = spark.createDataFrame(
-                    [(i, a if isinstance(a, str) else None,
-                      b if isinstance(b, str) else None)
-                     for i, a, b in ranges],
-                    "seg_idx int, mn string, mx string")
-            k_typed = keys.select(
-                F.col("__k").cast(dict(rdf.dtypes)["mn"]).alias("__k"))
-            # fail-open on EITHER null bound (a decimal-overflow cast
-            # nulls only the oversized side, and Python-side ranges
-            # null both) AND on a null-cast key — k>=mn evaluating to
-            # NULL must touch, never skip: a delete may over-rewrite,
-            # never miss
-            touched_rows = (
-                F.broadcast(rdf).join(
-                    k_typed,
-                    F.col("mn").isNull() | F.col("mx").isNull()
-                    | F.col("__k").isNull()
-                    | ((F.col("__k") >= F.col("mn"))
-                       & (F.col("__k") <= F.col("mx"))),
-                )
-                .select("seg_idx").distinct().collect()
+                ranges.append((i, None, None))  # fail-open: touch
+        # numeric stats compare in DECIMAL (a double cast of a >2^53
+        # integer bound rounds, and a shrunken range could wrongly
+        # EXCLUDE a boundary segment — the one failure a delete must
+        # never make); string stats (string cols, ISO timestamps)
+        # compare lexicographically, which is their recorded ordering
+        # contract
+        numeric = all(
+            isinstance(x, (int, float)) or x is None
+            for _, a, b in ranges for x in (a, b))
+        if numeric:
+            rdf = spark.createDataFrame(
+                [(i, str(a) if a is not None else None,
+                  str(b) if b is not None else None)
+                 for i, a, b in ranges],
+                "seg_idx int, mn string, mx string",
+            ).select(
+                "seg_idx",
+                F.col("mn").cast("decimal(38,9)").alias("mn"),
+                F.col("mx").cast("decimal(38,9)").alias("mx"),
             )
-            touched = {r["seg_idx"] for r in touched_rows}
-            if not touched:
-                if _publish(spark, table, v + 1, segments, key, scols):
-                    return v + 1
-                continue
-            keep = [s for i, s in enumerate(segments)
-                    if i not in touched]
-            rewrite = [s for i, s in enumerate(segments)
-                       if i in touched]
-            survivors = _segments_df(spark, table, key, rewrite, v).join(
-                keys.select(F.col("__k").alias(key_col)),
-                key_col, "left_anti",
+        else:
+            rdf = spark.createDataFrame(
+                [(i, a if isinstance(a, str) else None,
+                  b if isinstance(b, str) else None)
+                 for i, a, b in ranges],
+                "seg_idx int, mn string, mx string")
+        k_typed = keys.select(
+            F.col("__k").cast(dict(rdf.dtypes)["mn"]).alias("__k"))
+        # fail-open on EITHER null bound (a decimal-overflow cast nulls
+        # only the oversized side, and Python-side ranges null both)
+        # AND on a null-cast key — k>=mn evaluating to NULL must touch,
+        # never skip: a delete may over-rewrite, never miss
+        touched_rows = (
+            F.broadcast(rdf).join(
+                k_typed,
+                F.col("mn").isNull() | F.col("mx").isNull()
+                | F.col("__k").isNull()
+                | ((F.col("__k") >= F.col("mn"))
+                   & (F.col("__k") <= F.col("mx"))),
             )
-            staged_dir, new_segs = _stage(spark, survivors, table, key)
-            staged_dirs.append(staged_dir)
-            pub_key = key
-            if not keep and not new_segs:
-                # the delete emptied a keyed table: an empty keyed
-                # staging has no partition dirs, and a zero-segment
-                # manifest crashes every reader (_commit refuses the
-                # v1 analogue) — publish an unkeyed zero-row anchor
-                # carrying the full survivor schema instead. Built
-                # from an empty local relation: reaching here proves
-                # survivors is empty, and re-staging its anti-join
-                # plan would scan every touched segment a second time
-                staged_dir, new_segs = _stage(
-                    spark,
-                    spark.createDataFrame([], survivors.schema),
-                    table, None)
-                staged_dirs.append(staged_dir)
-                pub_key = None
-            if scols and new_segs:
-                _attach_stats(spark, table, new_segs, pub_key, scols)
-            if _publish(spark, table, v + 1, keep + new_segs, pub_key,
-                        scols):
-                staged_dirs.remove(staged_dir)
-                return v + 1
-        raise RuntimeError(
-            f"txn delete on {table}: lost {_MAX_RETRIES} optimistic "
-            "races")
+            .select("seg_idx").distinct().collect()
+        )
+        touched = {r["seg_idx"] for r in touched_rows}
+        if not touched:
+            return key, segments, scols
+        keep = [s for i, s in enumerate(segments) if i not in touched]
+        rewrite = [s for i, s in enumerate(segments) if i in touched]
+        survivors = _segments_df(spark, table, key, rewrite, v).join(
+            keys.select(F.col("__k").alias(key_col)),
+            key_col, "left_anti",
+        )
+        new_segs = stage(survivors, key, scols)
+        if keep or new_segs:
+            return key, keep + new_segs, scols
+        # the delete emptied a keyed table: an empty keyed staging has
+        # no partition dirs, and a zero-segment manifest crashes every
+        # reader — publish an unkeyed zero-row anchor carrying the full
+        # survivor schema instead. Built from an empty local relation:
+        # reaching here proves survivors is empty, and re-staging its
+        # anti-join plan would scan every touched segment a second time
+        return None, stage(spark.createDataFrame([], survivors.schema),
+                           None, scols), scols
+
+    try:
+        return _commit(spark, table, attempt)
     finally:
         keys.unpersist()
-        for d in staged_dirs:
-            _delete(spark, f"{table}/{d}")
 
 
 def txn_overwrite(spark: SparkSession, df: DataFrame, table: str,
@@ -979,21 +964,17 @@ def txn_overwrite(spark: SparkSession, df: DataFrame, table: str,
     rebuilt mart keeps one full superseded copy per rebuild forever
     (round-6 ADVICE); callers that want full history keep the
     default."""
-    ver = _commit_staged(
+    ver = _commit_batch(
         spark, df, table, key,
         lambda old, staged: staged,
         pre_publish_hook, None, stats_cols,
     )
     if auto_vacuum and ver > 0:
-        vacuum(spark, table,
-               keep_versions=AUTO_VACUUM_KEEP_VERSIONS,
-               min_age_sec=AUTO_VACUUM_MIN_AGE_SEC)
+        _auto_vacuum(spark, table)
     return ver
 
 
-def txn_compact(spark: SparkSession, table: str,
-                pre_publish_hook=None,
-                auto_vacuum: bool = True) -> int | None:
+def txn_compact(spark: SparkSession, table: str) -> int | None:
     """Key-preserving compaction: rewrite the current snapshot into ONE
     fresh data dir (one segment per partition for keyed tables) and
     publish it as the next version. Collapses the read plan from
@@ -1002,122 +983,73 @@ def txn_compact(spark: SparkSession, table: str,
     compaction auto-vacuums superseded state within the retention
     bounds (``AUTO_VACUUM_*``; the age floor keeps every recent
     version time-travelable across the compaction boundary), so
-    storage is reclaimed by the write path itself —
-    ``auto_vacuum=False`` keeps all superseded versions until an
-    explicit ``vacuum``.
+    storage is reclaimed by the write path itself.
 
-    Same optimistic loop as ``txn_merge``: a conflict re-reads and
-    re-stages from the NEW snapshot, so no concurrent append/replace
-    is ever lost. Returns the new version, the current version if the
-    table is already compact, or None for nonexistent/plain tables."""
-    staged_dirs: list[str] = []
-    try:
-        for _ in range(_MAX_RETRIES):
-            v = current_version(spark, table)
-            if v is None:
-                return None
-            manifest = _read_manifest(spark, table, v)
-            if _live_dirs(manifest["segments"]) <= 1:
-                return v
-            key = manifest["key"]
-            df = read_table(spark, table, version=v)
-            # the rewrite recomputes the table's recorded column stats
-            # for the fresh segments (carried forward in the manifest);
-            # unkeyed rewrites observe them inside the staging write
-            # (r15), keyed ones keep the per-partition read-back
-            staged_dir, segments = _stage(
-                spark, df, table, key,
-                observe_stats_cols=manifest.get("stats_cols"))
-            if manifest.get("stats_cols") and key is not None:
-                _attach_stats(spark, table, segments, key,
-                              manifest["stats_cols"])
-            staged_dirs.append(staged_dir)
-            if pre_publish_hook is not None:
-                pre_publish_hook()
-            if _publish(spark, table, v + 1, segments, key,
-                        manifest.get("stats_cols")):
-                staged_dirs.pop()  # committed — don't clean it up
-                if auto_vacuum:
-                    vacuum(spark, table,
-                           keep_versions=AUTO_VACUUM_KEEP_VERSIONS,
-                           min_age_sec=AUTO_VACUUM_MIN_AGE_SEC)
-                return v + 1
-        raise RuntimeError(
-            f"txn compact on {table}: lost {_MAX_RETRIES} optimistic races"
-        )
-    finally:
-        for d in staged_dirs:
-            _delete(spark, f"{table}/{d}")
+    A conflict re-reads and re-stages from the NEW snapshot, so no
+    concurrent append/replace is ever lost. The rewrite recomputes the
+    table's recorded column stats for the fresh segments. Returns the
+    new version, the current version if the table is already compact,
+    or None for nonexistent/plain tables."""
+    rewrote = False
+
+    def attempt(v, manifest, stage):
+        nonlocal rewrote
+        rewrote = manifest is not None and \
+            _live_dirs(manifest["segments"]) > 1
+        if not rewrote:
+            return v
+        key, scols = manifest["key"], manifest.get("stats_cols")
+        df = read_table(spark, table, version=v)
+        return key, stage(df, key, scols), scols
+
+    ver = _commit(spark, table, attempt)
+    if rewrote:
+        _auto_vacuum(spark, table)
+    return ver
 
 
 def txn_merge(spark: SparkSession, table: str, merge_fn,
-              pre_publish_hook=None, auto_vacuum: bool = True,
-              stats_cols: list[str] | None = None) -> int:
+              pre_publish_hook=None) -> int:
     """Full-rewrite merge: ``merge_fn(existing_df_or_None) -> DataFrame``
     computes the new table contents from the current snapshot; the
-    result is staged and committed. On an optimistic-concurrency
+    result is staged unkeyed and committed. On an optimistic-concurrency
     conflict the merge re-runs against the NEW snapshot (true MERGE
     semantics — no lost updates), and the orphaned staged dir is
     dropped. Doubles as compaction: many-segment tables collapse to
-    one segment. ``stats_cols`` behaves as in ``txn_append``: None
-    inherits the table's recorded stats columns."""
-    staged_dirs: list[str] = []
-    try:
-        for _ in range(_MAX_RETRIES):
-            v = current_version(spark, table)
-            if v is None:
-                # Adopt ANY plain layout — flat files or a partitioned
-                # key=value tree — by reading exactly the plain
-                # entries: the merge rewrites everything into one
-                # segment, so no layout matching is needed, but losing
-                # either layout's rows (the pre-fix behavior for
-                # partitioned trees) would be silent data loss. Paths
-                # are enumerated explicitly so a leaked d-* staged dir
-                # can't poison partition discovery.
-                plain = (
-                    _plain_entries(spark, table)
-                    if _exists(spark, table) else []
-                )
-                dirs = [n for n, is_dir in plain if is_dir]
-                files = [n for n, is_dir in plain if not is_dir]
-                if dirs:
-                    existing = spark.read.option("basePath", table).parquet(
-                        *[f"{table}/{n}" for n in dirs + files]
-                    )
-                elif files:
-                    existing = spark.read.parquet(
-                        *[f"{table}/{f}" for f in files]
-                    )
-                else:
-                    existing = None
-                next_v = 1
-                scols = None
+    one segment. The table's recorded stats columns are inherited and
+    recomputed for the new segment. Every ``AUTO_VACUUM_EVERY``-th
+    version auto-vacuums."""
+    def attempt(v, manifest, stage):
+        if manifest is not None:
+            scols = manifest.get("stats_cols")
+            existing = read_table(spark, table, version=v)
+        else:
+            # Adopt ANY plain layout — flat files or a partitioned
+            # key=value tree — by reading exactly the plain entries:
+            # the merge rewrites everything into one segment, so no
+            # layout matching is needed, but losing either layout's
+            # rows would be silent data loss. Paths are enumerated
+            # explicitly so a leaked d-* staged dir can't poison
+            # partition discovery.
+            scols = None
+            plain = (_plain_entries(spark, table)
+                     if _exists(spark, table) else [])
+            dirs = [n for n, is_dir in plain if is_dir]
+            files = [n for n, is_dir in plain if not is_dir]
+            if dirs:
+                existing = spark.read.option("basePath", table).parquet(
+                    *[f"{table}/{n}" for n in dirs + files])
+            elif files:
+                existing = spark.read.parquet(
+                    *[f"{table}/{f}" for f in files])
             else:
-                existing = read_table(spark, table, version=v)
-                next_v = v + 1
-                scols = _read_manifest(spark, table, v).get("stats_cols")
-            if stats_cols is not None:
-                scols = stats_cols
-            merged = merge_fn(existing)
-            # unkeyed staging: stats ride the write via observe (r15)
-            staged_dir, segments = _stage(spark, merged, table, None,
-                                          observe_stats_cols=scols)
-            staged_dirs.append(staged_dir)
-            if pre_publish_hook is not None:
-                pre_publish_hook()
-            if _publish(spark, table, next_v, segments, None, scols):
-                staged_dirs.pop()  # committed — don't clean it up
-                if auto_vacuum and next_v % AUTO_VACUUM_EVERY == 0:
-                    vacuum(spark, table,
-                           keep_versions=AUTO_VACUUM_KEEP_VERSIONS,
-                           min_age_sec=AUTO_VACUUM_MIN_AGE_SEC)
-                return next_v
-        raise RuntimeError(
-            f"txn merge on {table}: lost {_MAX_RETRIES} optimistic races"
-        )
-    finally:
-        for d in staged_dirs:
-            _delete(spark, f"{table}/{d}")
+                existing = None
+        return None, stage(merge_fn(existing), None, scols), scols
+
+    ver = _commit(spark, table, attempt, pre_publish_hook)
+    if ver % AUTO_VACUUM_EVERY == 0:
+        _auto_vacuum(spark, table)
+    return ver
 
 
 def _mtime_ms(spark: SparkSession, path: str) -> float | None:

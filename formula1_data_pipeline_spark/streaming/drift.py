@@ -19,6 +19,7 @@ and one manifest append. The reference is never rescanned.
 from __future__ import annotations
 
 import pathlib
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,20 +96,24 @@ def stream_drift_monitor(
     (:func:`drift_vs_reference_counts` is shared), so the streaming
     leg adds only plumbing — the convergence test compares each
     landed row against the batch path run on the same slice."""
-    import pyarrow.parquet as pq
-
     docs = spark.read.parquet(documents_path)
     base = pathlib.Path(scratch_dir(prefix="stream_drift_"))
     src_dir = base / "src"
     src_dir.mkdir()
     landing = str(base / "monitor")
-    # one file per deterministic slice, ordered names: the file
-    # source discovers and triggers them in path order, so batch i
-    # carries slice i (test-observable; the math is order-free)
+    # one file per deterministic slice, each written by its own Spark
+    # job (the rows stay on the executors) and renamed to an
+    # ordered name. Slices are written one after another, so their
+    # mtimes follow slice order: the file source triggers them in that
+    # order and batch i carries slice i (test-observable; the math is
+    # order-free)
     for i in range(n_source_files):
-        part = docs.filter(F.col(id_col) % n_source_files == i)
-        pq.write_table(part.toArrow(),
-                       str(src_dir / f"{i:04d}.parquet"))
+        tmp = base / f"slice-{i:04d}"
+        (docs.filter(F.col(id_col) % n_source_files == i)
+         .coalesce(1).write.parquet(str(tmp)))
+        [part] = tmp.glob("part-*.parquet")
+        part.rename(src_dir / f"{i:04d}.parquet")
+        shutil.rmtree(tmp)
 
     from formula1_data_pipeline_spark.operators.quality import (
         value_counts_long,

@@ -205,7 +205,10 @@ def test_stateful_first_seen_matches_batch(spark, tmp_path):
         normalize_event_ts,
     )
     from formula1_data_pipeline_spark.queries import load
-    from formula1_data_pipeline_spark.streaming import stateful_first_seen
+    from formula1_data_pipeline_spark.streaming import (
+        scaffold,
+        stateful_first_seen,
+    )
 
     sf_dir = "/root/testdata/sf0.001"
     src = tmp_path / "stream_src"
@@ -217,17 +220,9 @@ def test_stateful_first_seen_matches_batch(spark, tmp_path):
         spark.readStream.schema(raw_schema).format("parquet").load(str(src))
     )
     deduped = stateful_first_seen(stream)
-    q = (
-        deduped.writeStream.format("memory").queryName("first_seen")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
     got = {
         (r["user_id"], r["event_type"], r["event_id"])
-        for r in spark.table("first_seen").collect()
+        for r in scaffold.run(deduped, "first_seen", base=tmp_path).collect()
     }
 
     ev = load(spark, sf_dir, "events")["events"]

@@ -1556,56 +1556,3 @@ def test_temporal_split_oracle_parity(spark):
     assert bands["embargo"] > 0
 
 
-# --------------------------------------------------------------------
-# Targeted delete (sources/txn.py::txn_delete_keys, round 10 late) —
-# the right-to-be-forgotten path: rewrite ONLY the manifest segments
-# whose [min,max] key stats can intersect the delete set, carry the
-# rest by reference; old versions stay time-travelable until vacuum
-# (retention = the GDPR clock). LANDING ROUTE: rides
-# q75_time_travel's r12 re-gate (q75 owns the versioned-read surface;
-# r10-window, due r12) as before/after-delete legs under one kind
-# discriminator. Exact relational semantics: full value hash against
-# the plain anti-join oracle.
-
-def test_txn_delete_keys_oracle_parity(spark, tmp_path):
-    from formula1_data_pipeline_spark.queries import load
-    from formula1_data_pipeline_spark.sources import txn
-
-    orders = load(spark, SF_DIR, "orders")["orders"].select(
-        "o_orderkey", "o_custkey", "o_totalprice")
-    mx = orders.agg(F.max("o_orderkey")).collect()[0][0]
-    path = str(tmp_path / "orders_t")
-    txn.txn_append(spark, orders.filter(F.col("o_orderkey") <= mx // 2),
-                   path, stats_cols=["o_orderkey"],
-                   compact_threshold=None)
-    txn.txn_append(spark, orders.filter(F.col("o_orderkey") > mx // 2),
-                   path, compact_threshold=None)
-    # delete keys concentrated in the LOW half: the high segment must
-    # carry by reference
-    keys = orders.filter(
-        (F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") <= mx // 2)
-    ).select("o_orderkey")
-    before = [s["dir"] for s in txn._read_manifest(
-        spark, path, txn.current_version(spark, path))["segments"]]
-    v = txn.txn_delete_keys(spark, keys, path, "o_orderkey")
-    after = [s["dir"] for s in txn._read_manifest(
-        spark, path, v)["segments"]]
-    assert before[1] in after and before[0] not in after
-
-    got = sorted(tuple(r) for r in txn.read_table(spark, path)
-                 .select("o_orderkey", "o_custkey",
-                         "o_totalprice").collect())
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW orders AS SELECT * FROM "
-        f"read_parquet('{SF_DIR}/orders.parquet')"
-    )
-    exp = sorted(tuple(r) for r in con.execute(f"""
-        SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        WHERE NOT (o_orderkey % 7 = 0 AND o_orderkey <= {mx // 2})
-    """).fetchall())
-    assert got == exp and len(got) > 0
-    # the pre-delete version still reads complete (vacuum is what
-    # destroys rows — the retention clock)
-    assert txn.read_table(spark, path, version=v - 1).count() == \
-        orders.count()

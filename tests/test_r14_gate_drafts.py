@@ -4,14 +4,6 @@ whose catalog landings ride CHANGED extensions of queries due in r12
 free rows, riders only). File named r14 for the fallback window: if
 an r12 host's window is tight, both targets re-gate again in r14.
 
-  * persisted incremental aggregate mart (``operators/aggmart.py`` —
-    landed mergeable partial aggregates: per-batch (n, sum, min,
-    max, sumsq) rows, query-time fold, rollup over any group
-    subset, batch-id exactly-once appends). LANDING ROUTE: rides
-    q79's r12 re-gate (q79 owns the profiling surface, r10-gated,
-    due r12) as kind='aggmart' rows — EXACT values under the full
-    hash, derived floats replaying the documented expression shape.
-
   * sparse random projection (``operators/dimred.py`` — Achlioptas
     JL projection with an md5-derived sign matrix; ordered-fold dot
     products make projected values BIT-IDENTICAL across engines).
@@ -63,36 +55,6 @@ from tests.oracle_compare import canon, run_oracle
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 _D, _K = 64, 16
-
-#: the q79 rider leg: a 3-batch mart over documents (doc_id % 3,
-#: batch-1 deliberately re-delivered — must be a no-op), read back at
-#: (source) grain plus the grand total. The oracle replays the exact
-#: derived-float shape from agg_mart_stats' docstring contract.
-_AGGMART_ORACLE = """
-WITH m AS (
-    SELECT source,
-           CAST(count(n_chars) AS BIGINT) AS n,
-           CAST(sum(CAST(n_chars AS BIGINT)) AS BIGINT) AS s,
-           CAST(min(n_chars) AS BIGINT) AS mn,
-           CAST(max(n_chars) AS BIGINT) AS mx,
-           CAST(sum(CAST(n_chars AS BIGINT) * CAST(n_chars AS BIGINT))
-                AS BIGINT) AS ssq
-    FROM documents WHERE n_chars IS NOT NULL
-    GROUP BY GROUPING SETS ((source), ())
-)
-SELECT 'aggmart' AS kind, COALESCE(source, '_total') AS source,
-       n AS n_rows, s AS sum_value, mn AS min_value, mx AS max_value,
-       CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mean_value,
-       greatest(CAST(ssq AS DOUBLE) / CAST(n AS DOUBLE)
-         - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-           * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 0.0) AS var_pop,
-       sqrt(greatest(CAST(ssq AS DOUBLE) / CAST(n AS DOUBLE)
-         - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-           * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 0.0))
-           AS stddev_pop
-FROM m
-"""
-
 
 def _rp_oracle() -> str:
     expr = DR.rp_oracle_expr(
@@ -277,37 +239,6 @@ def _compare(spark_df, oracle_sql: str, sf_dir: str):
     assert len(sdf) == len(odf), (len(sdf), len(odf))
     a, b = canon(sdf), canon(odf)
     assert a == b, [(x, y) for x, y in zip(a, b) if x != y][:3]
-
-
-@pytest.mark.parametrize("sf_dir", SFS)
-def test_draft_aggmart_kind(spark, sf_dir, tmp_path):
-    from formula1_data_pipeline_spark.operators.aggmart import (
-        agg_mart_append,
-        agg_mart_stats,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    mart = str(tmp_path / "mart")
-    for b in range(3):
-        agg_mart_append(spark, docs.filter(F.col("doc_id") % 3 == b),
-                        mart, ["source"], "n_chars", f"gate-{b}")
-    # deliberate re-delivery: exactly-once means the stats are
-    # unaffected, which the value hash then pins
-    assert agg_mart_append(
-        spark, docs.filter(F.col("doc_id") % 3 == 1),
-        mart, ["source"], "n_chars", "gate-1",
-    ) == 0
-    by_source = agg_mart_stats(spark, mart, ["source"])
-    total = agg_mart_stats(spark, mart, []).select(
-        F.lit("_total").alias("source"), "n_rows", "sum_value",
-        "min_value", "max_value", "mean_value", "var_pop", "stddev_pop",
-    )
-    out = by_source.unionByName(total).select(
-        F.lit("aggmart").alias("kind"), "source", "n_rows",
-        F.col("sum_value").cast("long").alias("sum_value"),
-        "min_value", "max_value", "mean_value", "var_pop", "stddev_pop",
-    )
-    _compare(out, _AGGMART_ORACLE, sf_dir)
 
 
 @pytest.mark.parametrize("sf_dir", SFS)

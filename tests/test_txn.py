@@ -197,6 +197,35 @@ def test_threaded_appends_all_land(spark, tmp_path):
     assert got == {f"k{i}" for i in range(n)}
 
 
+def test_failed_commit_leaves_no_staged_dir(spark, tmp_path, monkeypatch):
+    """A commit that raises must not leak its staged data dir — before
+    the single commit loop owned staged dirs, a key mismatch or a
+    commit that lost every optimistic race left a full copy of the
+    batch in an orphan d-* dir until a vacuum an hour later."""
+    from formula1_data_pipeline_spark.sources import txn as txn_mod
+
+    path = str(tmp_path / "t")
+    txn_append(spark, _df(spark, [("a", "1")], ["part", "v"]), path,
+               key="part")
+
+    def dirs():
+        return sorted(p.name for p in (tmp_path / "t").iterdir()
+                      if p.name.startswith("d-"))
+
+    before = dirs()
+    # (a) key mismatch: the table is keyed by 'part', the append is not
+    with pytest.raises(ValueError, match="keyed by 'part', got None"):
+        txn_append(spark, _df(spark, [("b", "2")], ["part", "v"]), path)
+    assert dirs() == before
+    # (b) every publish loses its race
+    monkeypatch.setattr(txn_mod, "_publish", lambda *a, **kw: False)
+    with pytest.raises(RuntimeError, match="optimistic races"):
+        txn_append(spark, _df(spark, [("c", "3")], ["part", "v"]), path,
+                   key="part")
+    assert dirs() == before
+    assert current_version(spark, path) == 1
+
+
 # ----------------------------------------------- layout & semantics --
 
 
@@ -394,14 +423,12 @@ def test_vacuum_retention_keyed_to_supersession_not_publish(
     import os
 
     path = str(tmp_path / "t")
-    txn_merge(spark, path, lambda _: _df(spark, [("a", "1")], ["k", "v"]),
-              auto_vacuum=False)
+    txn_merge(spark, path, lambda _: _df(spark, [("a", "1")], ["k", "v"]))
     old = 1.0  # epoch 1970: far past any age floor
     os.utime(_manifest_path(path, 1), (old, old))
     for d in (tmp_path / "t").glob("d-*"):
         os.utime(d, (old, old))
-    txn_merge(spark, path, lambda _: _df(spark, [("a", "2")], ["k", "v"]),
-              auto_vacuum=False)
+    txn_merge(spark, path, lambda _: _df(spark, [("a", "2")], ["k", "v"]))
 
     removed = vacuum(spark, path, keep_versions=1, min_age_sec=3600)
     assert removed == 0
