@@ -16,7 +16,8 @@ training has something to improve and a recall floor can separate
 working quantizers from broken ones (q92).
 
 Generation is driver-side NumPy (seeded ``default_rng``), then one
-``createDataFrame`` — the set is an EVALUATION fixture, bounded to a
+JVM local relation (``session.local_frame``) — the set is an
+EVALUATION fixture, bounded to a
 few thousand rows by construction; at deployment scale the
 corresponding object is a real embedding table, not a fixture.
 """
@@ -24,6 +25,8 @@ corresponding object is a real embedding table, not a fixture.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from formula1_data_pipeline_spark.session import local_frame
 
 
 def clustered_embeddings(
@@ -45,7 +48,8 @@ def clustered_embeddings(
     centers = rng.normal(size=(n_clusters, dim))
     labels = rng.integers(0, n_clusters, size=n)
     vecs = centers[labels] + rng.normal(scale=std, size=(n, dim))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (int(i), [float(x) for x in vecs[i]], int(labels[i]))
             for i in range(n)

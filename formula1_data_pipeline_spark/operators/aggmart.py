@@ -73,6 +73,7 @@ from formula1_data_pipeline_spark.operators.retrieval import (
     _committed_attempts,
     _overwrite_preserving_late,
 )
+from formula1_data_pipeline_spark.session import local_frame
 
 _PARTIALS, _COMMITS = "partials", "commits"
 
@@ -156,8 +157,8 @@ def agg_mart_append(
         if n_groups == 0:
             return 0
         txn_append(spark, part, t[_PARTIALS], stats_cols=group_cols)
-        marker = spark.createDataFrame(
-            [(attempt, batch_id)], "attempt string, batch_id string")
+        marker = local_frame(
+            spark, [(attempt, batch_id)], "attempt string, batch_id string")
         txn_append(spark, marker, t[_COMMITS])
         return n_groups
     finally:
@@ -302,8 +303,8 @@ def _agg_mart_compact_locked(spark, mart_dir, read_table,
     attempt = "compact-" + uuid.uuid4().hex[:16]
     txn_append(
         spark,
-        spark.createDataFrame(
-            [(attempt, attempt)], "attempt string, batch_id string"),
+        local_frame(
+            spark, [(attempt, attempt)], "attempt string, batch_id string"),
         t[_COMMITS],
     )
     partials = (

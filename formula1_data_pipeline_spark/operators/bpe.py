@@ -53,6 +53,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from formula1_data_pipeline_spark.operators.text import bpe_tokens
+from formula1_data_pipeline_spark.session import local_frame
 
 #: symbol delimiter — words containing it are excluded from training
 DELIM = "|"
@@ -295,9 +296,10 @@ def merges_df(spark, trained: list[tuple[str, str, int]]) -> DataFrame:
     downstream tokenization consumes ('left'/'right' avoided: both are
     SQL keywords/functions)."""
     rows = [(i, a, b, a + b, c) for i, (a, b, c) in enumerate(trained)]
-    return spark.createDataFrame(
-        rows, "merge_rank int, lhs string, rhs string, merged string, "
-              "pair_count long",
+    return local_frame(
+        spark, rows,
+        "merge_rank int, lhs string, rhs string, merged string, "
+        "pair_count long",
     )
 
 
@@ -347,7 +349,7 @@ def build_vocab(spark, docs: DataFrame,
         (a + b, len(alphabet) + k)
         for k, (a, b, _) in enumerate(trained)
     ]
-    return spark.createDataFrame(rows, "sym string, token_id int")
+    return local_frame(spark, rows, "sym string, token_id int")
 
 
 def bpe_tokenize(docs: DataFrame,

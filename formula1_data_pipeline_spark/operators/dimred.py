@@ -61,6 +61,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from formula1_data_pipeline_spark.session import local_frame
+
 #: seed namespace for the sign matrix; versioned so a future change
 #: re-keys rather than silently re-projecting.
 RP_SEED = "dimred-rp-v1"
@@ -494,8 +496,8 @@ def gram_mart_append(
             return 0
         txn_append(spark, seg, cells_t)
         txn_append(spark,
-                   spark.createDataFrame(
-                       [(attempt, batch_id)],
+                   local_frame(
+                       spark, [(attempt, batch_id)],
                        "attempt string, batch_id string"),
                    commits_t)
         return n_cells

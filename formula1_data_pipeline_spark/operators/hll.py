@@ -74,6 +74,7 @@ from formula1_data_pipeline_spark.operators.retrieval import (
 from formula1_data_pipeline_spark.operators.retrieval import (
     _overwrite_preserving_late,
 )
+from formula1_data_pipeline_spark.session import local_frame
 
 _SKETCHES, _COMMITS = "sketches", "commits"
 
@@ -126,7 +127,7 @@ def hll_sketch_append(
         if n_groups == 0:
             return 0
         txn_append(spark, sk, t[_SKETCHES], stats_cols=group_cols)
-        marker = spark.createDataFrame([(attempt,)], "attempt string")
+        marker = local_frame(spark, [(attempt,)], "attempt string")
         txn_append(spark, marker, t[_COMMITS])
         return n_groups
     finally:
@@ -210,7 +211,7 @@ def _hll_sketch_compact_locked(spark, index_dir, txn_append) -> None:
     attempt = uuid.uuid4().hex[:16]
     txn_append(
         spark,
-        spark.createDataFrame([(attempt,)], "attempt string"),
+        local_frame(spark, [(attempt,)], "attempt string"),
         t[_COMMITS],
     )
     from formula1_data_pipeline_spark.sources.txn import read_table

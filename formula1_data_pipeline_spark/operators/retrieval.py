@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from formula1_data_pipeline_spark.operators.dedup import tokens
+from formula1_data_pipeline_spark.session import local_frame
 
 #: k1 = 6/5, b = 3/4 (the standard Robertson defaults) pre-folded
 #: into the scaled-integer construction below; changing them means
@@ -316,7 +317,7 @@ def bm25_index_append(
         # re-delivered batch re-indexes under a new attempt.
         # overlap() raises only after every leg settles, so a failed
         # leg can never be followed by this marker.
-        marker = spark.createDataFrame([(attempt,)], "attempt string")
+        marker = local_frame(spark, [(attempt,)], "attempt string")
         txn_append(spark, marker, t[_COMMITS])
         return n_new
     finally:
@@ -367,7 +368,7 @@ def _bm25_index_compact_locked(spark, index_dir: str) -> None:
     attempt = uuid.uuid4().hex[:16]
     txn_append(
         spark,
-        spark.createDataFrame([(attempt,)], "attempt string"),
+        local_frame(spark, [(attempt,)], "attempt string"),
         t[_COMMITS],
     )
     tag = F.lit(attempt).alias("attempt")
@@ -715,11 +716,11 @@ def bm25_index_topk(
     # (round-10 ADVICE)
     qid_type = dict(queries_df.dtypes)[qid_col]
     if not qterms_local:
-        return spark.createDataFrame(
-            [], f"query_id {qid_type}, doc_id long, "
-                "n_terms_matched long, score double, rank int")
-    qterms = spark.createDataFrame(
-        [(r["query_id"], t_) for r in qrows for t_ in r["terms"]],
+        return local_frame(
+            spark, [], f"query_id {qid_type}, doc_id long, "
+            "n_terms_matched long, score double, rank int")
+    qterms = local_frame(
+        spark, [(r["query_id"], t_) for r in qrows for t_ in r["terms"]],
         f"query_id {qid_type}, term string",
     )
     hit = F.col("term").isin(qterms_local)

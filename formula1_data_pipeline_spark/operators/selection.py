@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from formula1_data_pipeline_spark.operators.packing import (
     _require_numeric_id,
 )
+from formula1_data_pipeline_spark.session import local_frame
 
 
 def quantize6(score: Column) -> Column:
@@ -205,10 +206,11 @@ def select_token_budget_by_group(
     # group instead of vanishing at the inner equi-joins; the output
     # carries the original (possibly NULL) group_col
     null_key = "\x00__null_group__"
-    bdf = spark.createDataFrame(
+    bdf = local_frame(
+        spark,
         [(g if g is not None else null_key, int(b))
          for g, b in budgets.items()],
-        schema="_gkey string, _budget long",
+        "_gkey string, _budget long",
     )
     d = docs.select(
         F.col(group_col).cast("string").alias(group_col),

@@ -8,6 +8,11 @@
   (sign-bit sketch from deterministic per-dimension hashes), candidates
   = same-bucket pairs, exact cosine on candidates only. At 100 TB the
   corpus shuffles once on bucket keys instead of cross-joining.
+- **train_ivf_centroids** — Lloyd quantizer training the way FAISS's
+  k-means does it (Johnson et al. 2019): one Spark job takes a
+  bounded hash-order sample of at most 256 rows per centroid, and the
+  rounds run on the driver in NumPy over at most ``256·k·dim``
+  doubles. The corpus is read once, however many rounds run.
 
 Every top-k kind here and in ``vecindex``/``dimred`` ends in the same
 exact ranking step, ``rank_topk``; they differ only in how candidates
@@ -23,6 +28,8 @@ import functools
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from formula1_data_pipeline_spark.session import local_frame
 
 
 def _as_double(col: Column) -> Column:
@@ -189,7 +196,7 @@ def _plane_coefs(spark, dim: int, n_tables: int, n_planes: int) -> DataFrame:
             plane_id = t * n_planes + p
             vals = _hyperplane(dim, plane_id)
             rows.extend((d, plane_id, vals[d]) for d in range(dim))
-    return spark.createDataFrame(rows, "d int, plane int, coef double")
+    return local_frame(spark, rows, "d int, plane int, coef double")
 
 
 def _lsh_bucketed(df: DataFrame, dim: int, n_tables: int, n_planes: int,
@@ -418,24 +425,49 @@ def _ivf_assign(base: DataFrame, coefs: DataFrame, n_best: int,
     return base.join(assigned, "id").select(*cols)
 
 
+def _hash_order() -> list[Column]:
+    """The deterministic md5 hash order over ``id`` (id tie-break):
+    the order every hash-sample quantizer init and the Lloyd training
+    sample are drawn in."""
+    return [F.md5(F.col("id").cast("string")), F.col("id")]
+
+
 def _hash_sample_coefs(base: DataFrame, n_centroids: int) -> DataFrame:
     """(cluster, cnorm, d, coef) centroid table from the deterministic
     md5 hash-sample of ``base`` (id, vec, nrm) — the shared quantizer
     init of q34/q89 (see ``ivf_flat_topk``'s docstring for why a hash
-    order, not first-n ids). ``train_ivf_centroids`` refines it with
-    Lloyd iterations; any (cluster, cnorm, d, coef) table plugs into
-    the same consumers."""
-    hrank = [F.md5(F.col("id").cast("string")), F.col("id")]
+    order, not first-n ids). ``train_ivf_centroids`` starts from the
+    same rows and refines them with Lloyd iterations; any (cluster,
+    cnorm, d, coef) table plugs into the same consumers."""
     cent = (
-        base.orderBy(*hrank).limit(n_centroids)
+        base.orderBy(*_hash_order()).limit(n_centroids)
         .withColumn(
-            "cluster", F.row_number().over(Window.orderBy(*hrank)) - 1
+            "cluster", F.row_number().over(Window.orderBy(*_hash_order()))
+            - 1
         )
     )
     return cent.select(
         "cluster", F.col("nrm").alias("cnorm"),
         F.posexplode("vec").alias("d", "coef"),
     )
+
+
+# FAISS's ``max_points_per_centroid``: k-means trains on at most this
+# many points per centroid and subsamples a larger training set.
+_MAX_POINTS_PER_CENTROID = 256
+
+
+def _fold_dots(x, c):
+    """(rows, clusters) dot products of ``x`` (rows, dim) against ``c``
+    (clusters, dim), accumulated one dimension at a time from 0.0 —
+    the same operation order as the ``dot`` fold, so each score is
+    bit-identical to the SQL one."""
+    import numpy as np
+
+    acc = np.zeros((x.shape[0], c.shape[0]))
+    for d in range(x.shape[1]):
+        acc += x[:, d, None] * c[None, :, d]
+    return acc
 
 
 def train_ivf_centroids(
@@ -445,134 +477,136 @@ def train_ivf_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Distributed Lloyd (k-means) quantizer training: md5 hash-sample
-    init, then ``n_iter`` rounds of cosine-assign + per-cluster mean.
-    Returns the (cluster, cnorm, d, coef) coefficient table that
+    """Lloyd (k-means) quantizer training: md5 hash-sample init, then
+    ``n_iter`` rounds of cosine-assign + per-cluster mean. Returns the
+    (cluster, cnorm, d, coef) coefficient table that
     ``ivf_flat_topk(centroid_coefs=...)`` and ``semantic_dedup``'s
     assignment consume — the "production swaps in offline k-means"
     one-line change those docstrings promise, as an operator.
 
-    Scale shape (the MLlib KMeans pattern): per iteration ONE
-    assignment pass over the corpus (explode + broadcast centroid
-    join + codegen'd SUM per (id, cluster) — map-side work plus a
-    skinny shuffle) and ONE per-cluster mean aggregation (map-side
-    partial agg; ships n_centroids x dim partial sums). Centroids
-    live on the driver between iterations — n_centroids x dim doubles,
-    a bounded scalar at any corpus size since n_centroids ~ sqrt(N)
-    stays quantizer-sized — so the lazy plan never deepens with
-    iterations. Clusters that lose every member carry their previous
-    centroid forward (no vanishing cells). n_iter is a fixed bound,
-    not a convergence loop. A non-NULL vector whose length differs
-    from the centroids' raises in the first round's assignment.
+    Scale shape (FAISS's k-means, Johnson et al. 2019): ONE Spark job
+    takes a bounded training sample — the first
+    ``256 * n_centroids`` rows in the (md5(id), id) hash order, FAISS's
+    ``max_points_per_centroid`` subsample, taken as a TakeOrdered (per
+    partition top rows, merged on the driver; no shuffle of the
+    corpus). Its first ``n_centroids`` rows are the hash-sample init
+    exactly (``_hash_sample_coefs``). The ``n_iter`` rounds then run on
+    the driver in NumPy over at most ``256 * n_centroids * dim``
+    doubles, so the corpus is read once, not once per round, and the
+    per-round jobs and their driver round trips are gone. A corpus
+    that fits the sample trains on every row (full-data Lloyd). The
+    same job checks every row's vector length through an observed
+    min/max of ``size(vec)``, so a ragged vector outside the sample
+    still raises.
 
-    Determinism: mean aggregation is IEEE-double and partial-sum
-    order depends on partitioning, so trained centroids can differ in
-    final ulps between runs. Consumers must gate on RECALL BOUNDS
-    (q92), never value-hash a trained quantizer's output — unlike the
+    Rules, per round: each row with a non-NULL id and vector goes to
+    its cosine argmax (the constant |x| dropped), ties to the LOWEST
+    cluster id; a zero-norm centroid never wins; a vector with a NULL
+    element scores -Infinity everywhere (it lands in the lowest
+    cluster, contributing its non-NULL elements to that cluster's
+    per-dimension means). A cluster takes the per-dimension mean of
+    its members, or carries its previous centroid forward when it has
+    none (no vanishing cells). n_iter is a fixed bound, not a
+    convergence loop. A non-NULL vector whose length differs from the
+    centroids' raises.
+
+    Determinism: scores use the ``dot`` fold's operation order and
+    means sum members in hash order, so a given sample trains the same
+    floats on every run. Consumers still gate on RECALL BOUNDS (q92),
+    never value-hash a trained quantizer's output — unlike the
     hash-sample init, which is exactly reproducible (q34's oracle
-    replays it).
-
-    Per-round shape (r15 optimization, guide §1.2/§2.4): centroids
-    are driver-resident anyway, so the assignment argmax is ONE
-    codegen'd projection over literal centroid coordinates (a SQL
-    string — one parse, no py4j chatter, no per-round
-    ``createDataFrame`` Python-RDD leg) and the means are ONE
-    groupBy(cluster) with a per-dimension ``avg`` — per round one job
-    of two stages instead of the r14 pipeline's explode + broadcast
-    centroid join + (id, cluster) aggregate + window argmax + join-
-    back (three extra shuffles per round, measured 3-4x the per-round
-    wall). Semantics preserved exactly where defined: cosine argmax
-    with ties to the LOWEST cluster id (struct-max on (score, -c)),
-    zero-norm centroids never win (score -Infinity, like the old
-    NULL-score sort), empty clusters carry their previous centroid
-    forward. Trained floats remain bounds-gated everywhere, so the
-    changed partial-sum ORDER inside dot/means is within contract.
-    The query-side assignment (``ivf_flat_topk``/``_ivf_assign``) is
-    untouched — q34's oracle replays that path exactly.
+    replays it). The query-side assignment
+    (``ivf_flat_topk``/``_ivf_assign``) is untouched.
     """
-    import math
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import Observation
 
     spark = vecs.sparkSession
     base = vecs.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
-    ).withColumn("nrm", norm(F.col("vec")))
+    )
+    # the length check is observed over every row the sample job
+    # reads, not just the rows it keeps
+    size = F.when(F.col("id").isNotNull() & F.col("vec").isNotNull(),
+                  F.size("vec"))
+    sizes = Observation()
+    sample = (
+        base.observe(sizes, F.min(size).alias("mn"),
+                     F.max(size).alias("mx"),
+                     F.min_by("id", size).alias("mn_id"),
+                     F.max_by("id", size).alias("mx_id"))
+        # a one-row generator hides a local relation's row count, so
+        # the optimizer keeps the limit (one TakeOrdered job) instead
+        # of dropping it for a three-job global sort
+        .select(F.inline(F.array(F.struct("id", "vec"))))
+        .orderBy(*_hash_order())
+        .limit(_MAX_POINTS_PER_CENTROID * n_centroids)
+        .toArrow()
+    )
+    vec_arr = sample.column("vec").combine_chunks()
 
-    # centroids: {cluster: [coef per dim]} — driver-resident, tiny
-    cent: dict[int, list[float]] = {}
-    for r in _hash_sample_coefs(base, n_centroids).collect():
-        cent.setdefault(r["cluster"], {})[r["d"]] = r["coef"]
-    cent = {c: [dd[d] for d in sorted(dd)] for c, dd in cent.items()}
+    # centroids: {cluster: [coef per dim]} — driver-resident, tiny; a
+    # NULL or empty init vector leaves its cluster out, as
+    # _hash_sample_coefs' posexplode does
+    cent = {c: v for c, v in
+            enumerate(vec_arr.slice(0, n_centroids).to_pylist()) if v}
 
     def coefs_df() -> DataFrame:
         rows = []
         for c, vec in sorted(cent.items()):
             cn = sum(x * x for x in vec) ** 0.5
             rows.extend((c, cn, d, x) for d, x in enumerate(vec))
-        return spark.createDataFrame(
-            rows, "cluster int, cnorm double, d int, coef double"
-        )
+        return local_frame(
+            spark, rows, "cluster int, cnorm double, d int, coef double")
 
     if not cent:  # empty corpus — nothing to train
         return coefs_df()
     dim = max(len(v) for v in cent.values())
-    neg_inf = "CAST('-Infinity' AS DOUBLE)"
+    obs = sizes.get
+    for n, who in ((obs["mn"], obs["mn_id"]), (obs["mx"], obs["mx_id"])):
+        if n is not None and n != dim:
+            raise ValueError(
+                f"train_ivf_centroids: vector {who} has length {n}, "
+                f"centroids have dim {dim}")
 
-    def dlit(x: float) -> str:
-        # repr of a non-finite double is not a valid SQL literal
-        # (the classify.py lesson); centroids are data means, so
-        # non-finite only under non-finite inputs — still parse
-        if math.isfinite(x):
-            return repr(x) + "D"
-        if math.isnan(x):
-            return "CAST('NaN' AS DOUBLE)"
-        return f"CAST('{'' if x > 0 else '-'}Infinity' AS DOUBLE)"
-
+    # training rows: non-NULL id and vector, all of length dim (checked
+    # above); NULL elements are masked out of scores and means
+    keep = ~(sample.column("id").is_null().to_numpy()
+             | vec_arr.is_null().to_numpy(zero_copy_only=False))
+    flat = vec_arr.filter(pa.array(keep)).flatten()
+    valid = ~flat.is_null().to_numpy(zero_copy_only=False)
+    x = np.where(valid, flat.to_numpy(zero_copy_only=False),
+                 0.0).reshape(-1, dim)
+    valid = valid.reshape(-1, dim)
+    complete = valid.all(axis=1)
+    cids = sorted(cent)
+    # rows scored per block: bounds the (rows, clusters) score matrix
+    block = max(1, (1 << 20) // len(cids))
     for _ in range(n_iter):
-        structs = []
-        for c, cvec in sorted(cent.items()):
-            cn = math.sqrt(sum(x * x for x in cvec))
-            if cn == 0.0:
-                score = neg_inf
-            else:
-                # dot as a fold over a literal ARRAY, not an unrolled
-                # vec[d]*lit sum: the unrolled form built a
-                # n_centroids x dim one-expression tree (~16k nodes at
-                # 16x64 — the q55 giant-tree trap; measured q34 14 ->
-                # 40 s), while the array literal lands in the
-                # references and the tree stays constant-size per
-                # cluster. Interpreted per-row eval is the q99 trade,
-                # documented there; a scan-CPU-bound deployment routes
-                # training assignment through _ivf_assign instead
-                # (the pre-r15 form, still the probe path)
-                lits = ", ".join(dlit(x) for x in cvec)
-                score = (
-                    f"coalesce(aggregate(zip_with(vec, array({lits}),"
-                    f" (x, c) -> x * c), 0.0D, (a, v) -> a + v)"
-                    f" / {dlit(cn)}, {neg_inf})")
-            structs.append(
-                f"named_struct('s', {score}, 'nc', {-c})")
-        argmax = f"(-array_max(array({', '.join(structs)})).nc)"
-        # a vector of another length would be NULL-padded by zip_with,
-        # score -Infinity everywhere and land in cluster 0 unnoticed —
-        # fail inside the same projection instead (no extra job); a
-        # NULL vector keeps its NULL-score path and never reaches a mean
-        cluster = (
-            f"CASE WHEN vec IS NOT NULL AND size(vec) != {dim} THEN "
-            f"raise_error(concat('train_ivf_centroids: vector ', "
-            f"CAST(id AS STRING), ' has length ', "
-            f"CAST(size(vec) AS STRING), ', centroids have dim {dim}')) "
-            f"ELSE {argmax} END")
-        # the old join-back dropped NULL-id rows from the means; the
-        # projection form must exclude them the same way
-        assigned = base.filter(F.col("id").isNotNull()).selectExpr(
-            f"{cluster} AS cluster", "vec")
-        means = assigned.groupBy("cluster").agg(
-            *[F.avg(F.col("vec")[d]).alias(f"_m{d}")
-              for d in range(dim)])
-        for r in means.collect():  # <= n_centroids rows
-            ms = [r[f"_m{d}"] for d in range(dim)]
-            if r["cluster"] in cent and all(m is not None for m in ms):
-                cent[r["cluster"]] = ms
+        # a centroid of another length (only from a NULL-id init row)
+        # scores as zero-norm: it never wins, as zip_with's NULL
+        # padding made it score -Infinity
+        c = np.array([cent[k] if len(cent[k]) == dim else [0.0] * dim
+                      for k in cids])
+        cn2 = np.zeros(len(cids))
+        for d in range(dim):
+            cn2 += c[:, d] * c[:, d]
+        cn = np.sqrt(cn2)
+        label = np.empty(len(x), dtype=np.int64)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            for lo in range(0, len(x), block):
+                score = _fold_dots(x[lo:lo + block], c) / cn
+                score[:, cn == 0.0] = -np.inf
+                score[~complete[lo:lo + block]] = -np.inf
+                label[lo:lo + block] = np.argmax(score, axis=1)
+        sums = np.zeros((len(cids), dim))
+        counts = np.zeros((len(cids), dim))
+        np.add.at(sums, label, x)
+        np.add.at(counts, label, valid)
+        for j, k in enumerate(cids):
+            if counts[j].all():
+                cent[k] = (sums[j] / counts[j]).tolist()
     return coefs_df()
 
 

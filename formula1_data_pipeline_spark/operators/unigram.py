@@ -53,6 +53,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from formula1_data_pipeline_spark.session import local_frame
+
 MAX_PIECE_LEN = 8     # longest candidate piece (chars)
 MAX_WORD_LEN = 32     # longest word the lattice DP unrolls
 UNK_LOGP = -20.0      # single-char fallback score (SentencePiece's
@@ -381,7 +383,8 @@ def seed_pieces(words: DataFrame, max_vocab: int,
         )
     finally:
         counts.unpersist()
-    return words.sparkSession.createDataFrame(
+    return local_frame(
+        words.sparkSession,
         [(r["piece"], r["count"]) for r in chars_rows + multi_rows],
         "piece string, count long",
     )
@@ -395,8 +398,8 @@ def seed_logprobs(pieces_counts: DataFrame) -> DataFrame:
     rows = pieces_counts.select("piece", "count").collect()
     total = sum(r["count"] for r in rows)
     spark = pieces_counts.sparkSession
-    return spark.createDataFrame(
-        [(r["piece"], math.log(r["count"] / total)) for r in rows],
+    return local_frame(
+        spark, [(r["piece"], math.log(r["count"] / total)) for r in rows],
         "piece string, logp double",
     )
 
@@ -462,7 +465,8 @@ def train_unigram(
             kept = singles + multi[:max(0, keep_n - len(singles))]
             total = sum(r["c"] for r in kept) or 1.0
             spark = words.sparkSession
-            vocab = spark.createDataFrame(
+            vocab = local_frame(
+                spark,
                 [(r["piece"], math.log(max(r["c"], 1e-12) / total))
                  for r in kept],
                 "piece string, logp double",
@@ -568,6 +572,7 @@ def _estep(words, vocab, w_col, freq_col, max_piece_len):
             F.sum("w").alias("c")).collect()
     finally:
         with_ab.unpersist()
-    exp_counts = posts.sparkSession.createDataFrame(
-        [(r["piece"], r["c"]) for r in rows], "piece string, c double")
+    exp_counts = local_frame(posts.sparkSession,
+                             [(r["piece"], r["c"]) for r in rows],
+                             "piece string, c double")
     return exp_counts, float(ll_row["ll"])

@@ -49,6 +49,7 @@ from formula1_data_pipeline_spark.operators.similarity import (
     rank_topk,
     train_ivf_centroids,
 )
+from formula1_data_pipeline_spark.session import local_frame
 
 _CENTROIDS, _LISTS, _META = "centroids", "lists", "meta"
 _IDBLOOM = "idbloom"
@@ -417,8 +418,8 @@ def ivf_index_build(
     # until it matches — so a crash between the three commits is a
     # loud partial-build error, never a silent old-lists/new-quantizer
     # mismatch
-    meta = spark.createDataFrame(
-        [(_quantizer_id(landed),)], "quantizer_id string"
+    meta = local_frame(
+        spark, [(_quantizer_id(landed),)], "quantizer_id string"
     )
     txn_overwrite(spark, meta, t[_META], auto_vacuum=True)
 

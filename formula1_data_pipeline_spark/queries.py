@@ -939,8 +939,10 @@ CHANGED_SINCE_GATE = [
     #      the lean Lloyd trainer rides its IVF build leg
     "q88_stream_neardup_dedup",
     # q92: pq qid-type/NULL-vec fixes + probe overlap (r14); r15:
-    #      fixtures localCheckpointed once + lean Lloyd trainer
-    #      (bounds rows by construction; sq8 value rows untouched)
+    #      lean Lloyd trainer; since then the fixtures are JVM local
+    #      relations (no checkpoint) and the trainer is one sample job
+    #      plus driver rounds (bounds rows by construction; sq8 value
+    #      rows untouched)
     "q92_ann_recall_clustered",
     # q87: verdicts lazy-unioned from pinned versions (r14)
     "q87_incremental_neardup_dedup",
@@ -954,9 +956,10 @@ CHANGED_SINCE_GATE = [
     #
     # -- round-15 optimization diff (physical paths; outputs
     #    parity-proven unchanged):
-    # q96: fixture localCheckpoint; ground-truth leg computed as the
-    #      direct all-pairs twin (drop-set equality test-pinned);
-    #      lean trainer on the lloyd leg
+    # q96: ground-truth leg computed as the direct all-pairs twin
+    #      (drop-set equality test-pinned); the r15 fixture checkpoint
+    #      is gone (a JVM local relation now) and the lloyd leg trains
+    #      in one sample job plus driver rounds
     "q96_semantic_dedup_trained",
     # q24: gram-mart appends + one-shot Gram check overlap; txn
     #      observed-stats fuse on the mart commits

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from formula1_data_pipeline_spark.queries import _dec_sum, load, register
+from formula1_data_pipeline_spark.session import local_frame
 
 _QUANTILES = {"p50": 0.5, "p90": 0.9, "p99": 0.99}
 
@@ -333,7 +334,8 @@ def q53_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) <= bound).alias("ok1"),
         nul_b.alias("ok2"),
     )
-    total = spark.createDataFrame(
+    total = local_frame(
+        spark,
         [("hll_idx", "_total", tot_exact,
           abs(tot_est - tot_exact) <= max(2.0, 0.05 * tot_exact),
           None)],

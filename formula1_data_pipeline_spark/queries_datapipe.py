@@ -37,6 +37,7 @@ from formula1_data_pipeline_spark.queries_llm import (
     _SQL_TOKS,
     _sql_quality,
 )
+from formula1_data_pipeline_spark.session import local_frame
 
 
 # the SimHash-edge connected-components CTE chain, shared by the q37
@@ -402,7 +403,8 @@ def q39_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
         )
     )
-    qdf = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
+    qdf = local_frame(spark, BM25_QUERIES,
+                      "query_id string, query_text string")
     qterms = qdf.select(
         F.col("query_id"),
         F.explode(

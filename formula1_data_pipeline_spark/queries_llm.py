@@ -21,6 +21,7 @@ from formula1_data_pipeline_spark.curation_diversity import (
     PER_CELL as _DIV_PER_CELL,
     diversity_cte_body as _diversity_cte_body,
 )
+from formula1_data_pipeline_spark.session import local_frame
 
 # DuckDB twin of operators.dedup.tokens / token_set
 _SQL_TOKS = (
@@ -561,7 +562,8 @@ def q24_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("mart_matches_one_shot_ok",
              bool(np.allclose(g_mart, g_full, rtol=1e-9))),
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [("pca", None, None, None, None, None, name, ok)
              for name, ok in checks],
             "kind string, q_id bigint, n_id bigint, cos_sim double, "
@@ -1181,8 +1183,8 @@ def q71_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("ivf", len(exact), len(exact & ivf) >= 0.75 * len(exact)),
         ("lsh", len(exact), len(exact & lsh) >= 0.60 * len(exact)),
     ]
-    return spark.createDataFrame(
-        rows, "method string, n_exact long, recall_ok boolean"
+    return local_frame(
+        spark, rows, "method string, n_exact long, recall_ok boolean"
     )
 
 
@@ -1595,15 +1597,12 @@ def q92_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_ivf_centroids,
     )
 
-    # the fixture is a driver-generated local relation: every job over
-    # it pays a Python-worker unpickle leg, and SIX legs each run
-    # multiple jobs over it. ONE eager localCheckpoint (r15; guide §5 —
-    # 2000 x 16 floats, nothing like the corpus-scale rows that made
-    # q34's persist lose) materializes it as JVM blocks; 8 partitions
-    # keep the many tiny downstream stages task-lean on local[32]
+    # the fixture is a JVM local relation (session.local_frame), so the
+    # six legs' jobs scan it with no Python-worker leg and nothing to
+    # checkpoint; 8 partitions keep the many tiny downstream stages
+    # task-lean on local[32]
     emb = clustered_embeddings(spark, n=2000, dim=16, n_clusters=20,
-                               std=0.6, seed=7) \
-        .coalesce(8).localCheckpoint(eager=True)
+                               std=0.6, seed=7).coalesce(8)
     queries = emb.filter(F.col("vec_id") < 20)
 
     def pairs(df):
@@ -1611,11 +1610,9 @@ def q92_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for r in df.select("q_id", "n_id").collect()}
 
     def lloyd_pairs():
-        # training is sequential (5 bounded Lloyd rounds), then the
-        # probe pipeline — one thread, same pattern as the other legs
-        # 3 iterations: recall on this fixture saturates at 0.95
-        # by iteration 2 (measured; 5 iters identical) — each extra
-        # iteration costs two driver-synchronized jobs
+        # training is one sample job plus 3 driver-side Lloyd rounds,
+        # then the probe pipeline; recall on this fixture saturates
+        # at 0.95 by iteration 2 (measured; 5 iters identical)
         coefs = train_ivf_centroids(emb, n_centroids=20, n_iter=3,
                                     id_col="vec_id",
                                     vec_col="embedding")
@@ -1635,14 +1632,12 @@ def q92_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from formula1_data_pipeline_spark.scratch import scratch_dir
 
-        # same localCheckpoint rationale as the main fixture: the
-        # build re-scans this frame per Lloyd round and 3x for the
-        # lists/bloom-count/bloom-words passes (recompute-from-scan
-        # is the keeper — r14's measured revert — but the SCAN should
-        # be JVM blocks, not a Python-RDD unpickle per job)
+        # a local relation like the main fixture: the build scans this
+        # frame once to train and 3x for the lists/bloom-count/bloom-
+        # words passes (recompute-from-scan is the keeper — r14's
+        # measured revert), each a JVM scan
         emb_s = clustered_embeddings(spark, n=600, dim=16,
-                                     n_clusters=8) \
-            .coalesce(4).localCheckpoint(eager=True)
+                                     n_clusters=8).coalesce(4)
         idx = str(scratch_dir(prefix="q92_ivfidx_"))
         ivf_index_build(spark, emb_s, idx, n_centroids=8, n_iter=5)
         q2 = emb_s.filter(F.col("vec_id") % 29 == 0)
@@ -1713,10 +1708,9 @@ def q92_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
          len(exact & lsh) >= 0.90 * len(exact), None, None),
         idx_row + (None, None),
     ] + [tuple(r) for r in sq8_collected]
-    return spark.createDataFrame(
-        rows, "method string, n_exact long, recall_ok boolean, "
-              "vec_id long, codes string"
-    )
+    return local_frame(
+        spark, rows, "method string, n_exact long, recall_ok boolean, "
+        "vec_id long, codes string")
 
 
 def _bpe_train_ctes(n_merges: int, src: str = "documents") -> list[str]:
@@ -1848,12 +1842,10 @@ def q96_semantic_dedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_ivf_centroids,
     )
 
-    # fixture checkpointed once (the q92 rationale: a local relation
-    # pays a Python-worker leg per job, and three legs each run
-    # several jobs over it)
+    # a JVM local relation (the q92 fixture note): three legs each run
+    # several jobs over it with no Python-worker leg
     emb = clustered_embeddings(spark, n=800, dim=16, n_clusters=20,
-                               std=0.7, seed=11) \
-        .coalesce(4).localCheckpoint(eager=True)
+                               std=0.7, seed=11).coalesce(4)
 
     def dropped(**kw):
         return {
@@ -1928,7 +1920,7 @@ def q96_semantic_dedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("lloyd_beats_hash", r_lloyd >= r_hash),
         ("n_exact_in_range", 150 <= len(exact) <= 400),
     ]
-    return spark.createDataFrame(rows, "method string, recall_ok boolean")
+    return local_frame(spark, rows, "method string, recall_ok boolean")
 
 
 def _bpe_tokenize_sql(n_merges: int = 10) -> str:
@@ -2357,4 +2349,4 @@ def q99_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("beats_majority", bool(r["acc"] >= majority + 0.05)),
         ("split_fraction_ok", bool(0.15 <= frac <= 0.25)),
     ]
-    return spark.createDataFrame(rows, "check_name string, ok boolean")
+    return local_frame(spark, rows, "check_name string, ok boolean")

@@ -17,10 +17,13 @@ Correctness assumptions (documented per SURVEY.md §4):
 
 from __future__ import annotations
 
+import datetime
 import os
 import tempfile
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _local_heap_default() -> str:
@@ -99,6 +102,19 @@ def get_spark(
         #     Spark's parquet reader rejects; read as long and convert
         #     (queries.load truncates to micros, matching DuckDB's cast).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # --- ConvertToLocalRelation folds a Project/Filter/Limit over
+        #     a local relation by evaluating it on the driver,
+        #     interpreted. A lambda variable (transform, aggregate,
+        #     zip_with) holds its current element IN the expression
+        #     object, and queries built on one frame share those
+        #     objects, so two concurrent queries (concurrency.overlap
+        #     legs) over one local_frame overwrite each other's
+        #     elements: ivf_index_build landed lists whose vectors mixed
+        #     elements of other rows. Excluded, the projection runs in
+        #     tasks, as over any other scan.
+        .config("spark.sql.optimizer.excludedRules",
+                "org.apache.spark.sql.catalyst.optimizer."
+                "ConvertToLocalRelation")
         # --- managed tables (bucketed layouts) land in tmp, not cwd;
         #     static conf, so it must be set at session build.
         .config(
@@ -133,3 +149,46 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple],
+                schema: str | StructType) -> DataFrame:
+    """A driver-side frame as a JVM local relation: ``rows`` become a
+    ``pyarrow.Table`` handed to ``spark.createDataFrame``, which plans
+    as ``LocalTableScan``. A plain list would plan as a Python RDD
+    instead, and every job over that frame would pay a Python-worker
+    leg. This is the package's one ``createDataFrame`` site.
+
+    ``schema`` is a DDL string or a ``StructType``. Each row is
+    checked against it exactly as the list path checks it (a value of
+    the wrong type raises ``TypeError``). A naive ``datetime`` in a
+    timestamp column raises ``ValueError``: the list path reads it in
+    the Python process's time zone and Arrow reads it as UTC, so the
+    same row would land at two different instants.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import TimestampType, _make_type_verifier
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    rows = list(rows)
+    verify = _make_type_verifier(schema)
+    ts_cols = [i for i, f in enumerate(schema.fields)
+               if isinstance(f.dataType, TimestampType)]
+    for r in rows:
+        verify(r)
+        for i in ts_cols:
+            v = r[i]
+            if isinstance(v, datetime.datetime) and v.tzinfo is None:
+                raise ValueError(
+                    f"local_frame: naive datetime {v!r} in timestamp "
+                    f"column {schema.fields[i].name!r}; pass an aware "
+                    "datetime (e.g. tzinfo=datetime.timezone.utc)")
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type)
+         for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -9,8 +9,8 @@ Spark-native:
 - **records_to_raw_df** (S3+F10-F12): list-of-dicts -> all-string
   DataFrame — union of keys becomes columns, nested values JSON-encode,
   null-sentinel strings scrub to NULL. This is the reference's
-  ``pd.DataFrame`` + ``clean_df`` collapsed into one createDataFrame +
-  column expressions.
+  ``pd.DataFrame`` + ``clean_df`` collapsed into one local relation
+  (``session.local_frame``) + column expressions.
 - **select_latest_session** (O1+O2): top-1 by (Race-beats-Qualifying,
   latest date) — ``dags/open_f1_realtime.py:208-217``.
 - **session_window_filter** (P5+P6+P7): 120-day window, session-type
@@ -19,7 +19,7 @@ Spark-native:
   key-injection defaults (F17) — ``dags/open_f1_historical.py:254-270``.
 
 The API returns a few thousand rows per session — driver-side fetch +
-createDataFrame is the right scale boundary; the heavy lifting starts
+a local relation is the right scale boundary; the heavy lifting starts
 once rows are parquet.
 """
 
@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import json
 import logging
-import threading
 import time
 from collections.abc import Iterable, Mapping
 from typing import Protocol
@@ -37,14 +36,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from formula1_data_pipeline_spark.functions.cleaning import scrub_dataframe
+from formula1_data_pipeline_spark.session import local_frame
 
 ENDPOINTS = ("laps", "intervals", "position", "race_control")
 SESSION_TYPES = ("Race", "Qualifying")
-
-# serializes the scoped Arrow-conf save/convert/restore in
-# records_to_raw_df — session conf is process-global
-_ARROW_CONF_LOCK = threading.Lock()
-
 
 class OpenF1Client(Protocol):
     """S1/S2 fetch surface; implementations return parsed JSON lists."""
@@ -193,61 +188,11 @@ def records_to_raw_df(
     schema = T.StructType(
         [T.StructField(c, T.StringType(), True) for c in cols]
     )
-    # Arrow-backed pandas conversion lands the batch as a JVM
-    # LocalRelation: every downstream job (the landing merges, the
-    # gate probes) evaluates it JVM-side with zero Python workers —
-    # measured ~3x faster per action than the Python-RDD path the
-    # plain list createDataFrame takes, across every ingest query.
-    try:
-        import pandas as pd
-
-        # get_spark() pins this at build; only externally-supplied
-        # sessions need it, and check-before-set keeps a hot ingest
-        # loop from re-writing session conf on every batch. The
-        # pandas->LocalRelation conversion is eager, so the setting
-        # can be scoped: restore the caller's value before returning
-        # rather than leaking a session-global mutation. The
-        # save/convert/restore runs under a process lock — session
-        # conf is process-global, and two concurrent conversions (or
-        # the threaded registry build running alongside an ingest)
-        # could otherwise unset the flag out from under each other
-        # mid-conversion.
-        arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
-        if spark.conf.get(arrow_key, None) == "true":
-            # fast path (the get_spark default): no conf mutation
-            # needed, so no lock — concurrent ingest conversions and
-            # the threaded registry build stay parallel. Benign race
-            # (r5 review, accepted): this unlocked read can observe a
-            # transient "true" set by a concurrent slow-path thread
-            # that restores the conf before our createDataFrame runs;
-            # the conversion then silently skips Arrow. Values are
-            # identical either way (both paths build the same
-            # LocalRelation) — the cost is one slower conversion in a
-            # window that requires an externally-supplied session
-            # with Arrow off racing a get_spark-default one, which no
-            # in-repo caller creates.
-            local = spark.createDataFrame(
-                pd.DataFrame(rows, columns=cols, dtype=object), schema
-            )
-        else:
-            with _ARROW_CONF_LOCK:
-                prev = spark.conf.get(arrow_key, None)
-                try:
-                    if prev != "true":
-                        spark.conf.set(arrow_key, "true")
-                    local = spark.createDataFrame(
-                        pd.DataFrame(rows, columns=cols, dtype=object),
-                        schema,
-                    )
-                finally:
-                    if prev != "true":
-                        if prev is None:
-                            spark.conf.unset(arrow_key)
-                        else:
-                            spark.conf.set(arrow_key, prev)
-    except ImportError:  # pandas-less fallback: same values, slower
-        local = spark.createDataFrame(rows, schema)
-    return scrub_dataframe(local)
+    # a JVM local relation: every downstream job (the landing merges,
+    # the gate probes) evaluates it JVM-side with zero Python workers —
+    # measured ~3x faster per action than the Python-RDD path a plain
+    # list createDataFrame takes, across every ingest query
+    return scrub_dataframe(local_frame(spark, rows, schema))
 
 
 def normalize_intervals(df: DataFrame) -> DataFrame:

@@ -90,6 +90,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from formula1_data_pipeline_spark.session import local_frame
 from formula1_data_pipeline_spark.sources import stores
 
 _TXN_DIR = "_txn"
@@ -881,7 +882,8 @@ def txn_delete_keys(spark: SparkSession, keys_df: DataFrame,
             isinstance(x, (int, float)) or x is None
             for _, a, b in ranges for x in (a, b))
         if numeric:
-            rdf = spark.createDataFrame(
+            rdf = local_frame(
+                spark,
                 [(i, str(a) if a is not None else None,
                   str(b) if b is not None else None)
                  for i, a, b in ranges],
@@ -892,7 +894,8 @@ def txn_delete_keys(spark: SparkSession, keys_df: DataFrame,
                 F.col("mx").cast("decimal(38,9)").alias("mx"),
             )
         else:
-            rdf = spark.createDataFrame(
+            rdf = local_frame(
+                spark,
                 [(i, a if isinstance(a, str) else None,
                   b if isinstance(b, str) else None)
                  for i, a, b in ranges],
@@ -931,7 +934,7 @@ def txn_delete_keys(spark: SparkSession, keys_df: DataFrame,
         # survivor schema instead. Built from an empty local relation:
         # reaching here proves survivors is empty, and re-staging its
         # anti-join plan would scan every touched segment a second time
-        return None, stage(spark.createDataFrame([], survivors.schema),
+        return None, stage(local_frame(spark, [], survivors.schema),
                            None, scols), scols
 
     try:

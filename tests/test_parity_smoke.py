@@ -1,4 +1,4 @@
-"""Always-on oracle parity for two operator families of the catalog.
+"""Always-on oracle parity for three operator families of the catalog.
 
 Streaming: each query replays a bounded stream through
 ``streaming/scaffold`` (memory sink: q31, q35, q54, q62; foreachBatch:
@@ -6,9 +6,19 @@ q36, q54, q69). Txn/ingest: each query commits through
 ``sources/txn`` — replace and merge (q14), overwrite (q73), append,
 targeted delete and time travel (q75), incremental replace (q76),
 concurrent appends to the aggregate mart (q79) and stats-pruned reads
-(q82). Every query must match its DuckDB oracle at sf0.001 — the
-catalog's oracle gate in miniature. The full catalog stays behind
-``ORACLE_PARITY=1`` in ``test_oracle_parity.py``.
+(q82). Vector: the hash-sample IVF with its persisted-index leg (q34),
+and the Lloyd-trained quantizer's recall, persisted-index and sq8 rows
+(q92) and trained semantic dedup (q96). Every query must match its
+DuckDB oracle at sf0.001 — the catalog's oracle gate in miniature.
+The full catalog stays behind ``ORACLE_PARITY=1`` in
+``test_oracle_parity.py``.
+
+The vector queries also pin how many Spark jobs they run, counted by
+job group (``concurrency.overlap`` legs inherit the caller's group).
+Each ceiling is the count measured when it was set; a change that adds
+actions to the query fails here instead of passing silently. Jobs are
+pinned, not codegen compiles: compile counts do not repeat run to run
+on unchanged code.
 """
 
 from __future__ import annotations
@@ -48,3 +58,28 @@ def test_streaming_query_matches_oracle(spark, name):
 def test_txn_ingest_query_matches_oracle(spark, name):
     res = compare_query(spark, name, SF_DIR)
     assert res["ok"], f"{name}: {res['detail']}"
+
+
+# query -> ceiling on its Spark jobs (build + collect) at sf0.001, or
+# None where no ceiling is pinned
+VECTOR = {
+    "q34_ivf_flat_topk": None,
+    "q92_ann_recall_clustered": 81,
+    "q96_semantic_dedup_trained": 29,
+}
+
+
+@pytest.mark.parametrize("name", sorted(VECTOR))
+def test_vector_query_matches_oracle(spark, name):
+    sc = spark.sparkContext
+    group = f"parity smoke: {name}"
+    sc.setJobGroup(group, name)
+    try:
+        res = compare_query(spark, name, SF_DIR)
+    finally:
+        sc.setJobGroup(None, None)
+    assert res["ok"], f"{name}: {res['detail']}"
+    ceiling = VECTOR[name]
+    if ceiling is not None:
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= ceiling, f"{name} ran {jobs} jobs > {ceiling}"

@@ -304,6 +304,107 @@ def test_lloyd_training_rejects_ragged_vectors(spark):
         train_ivf_centroids(ragged, n_centroids=2, n_iter=1)
 
 
+def _hash_rank(ids) -> list:
+    """``ids`` in the trainer's (md5(id), id) sample order."""
+    import hashlib
+
+    return sorted(ids, key=lambda i: (
+        hashlib.md5(str(i).encode()).hexdigest(), i))
+
+
+def test_lloyd_training_rejects_ragged_vector_outside_sample(spark):
+    """The trainer keeps only the first 256 * n_centroids rows of the
+    hash order, but the length check must still see every row: a
+    ragged vector ranked past the sample raises like one inside it."""
+    import pytest
+
+    from formula1_data_pipeline_spark.operators.similarity import (
+        train_ivf_centroids,
+    )
+    from formula1_data_pipeline_spark.session import local_frame
+
+    ids = list(range(300))
+    last = _hash_rank(ids)[-1]   # rank 300 > the 256-row sample
+    rows = [(i, [1.0, float(i), 0.5] if i != last else [1.0, 2.0])
+            for i in ids]
+    emb = local_frame(spark, rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match=f"vector {last} has length 2"):
+        train_ivf_centroids(emb, n_centroids=1, n_iter=1)
+
+
+def test_lloyd_training_runs_one_spark_job(spark):
+    """A fixture-sized training is one sample job: the Lloyd rounds
+    run on the driver and the coefficient table is a local relation."""
+    from formula1_data_pipeline_spark.evalsets import clustered_embeddings
+    from formula1_data_pipeline_spark.operators.similarity import (
+        train_ivf_centroids,
+    )
+
+    emb = clustered_embeddings(spark, n=600, dim=16, n_clusters=8)
+    sc = spark.sparkContext
+    group = "test_lloyd_training_runs_one_spark_job"
+    sc.setJobGroup(group, "lloyd job count")
+    try:
+        coefs = train_ivf_centroids(emb, n_centroids=8, n_iter=5)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert coefs.count() == 8 * 16
+
+
+def test_lloyd_training_matches_python_reference(spark):
+    """The NumPy rounds against a plain-Python Lloyd loop under the
+    same rules (init = first n_centroids rows of the hash order;
+    cosine argmax by a sequential dot fold, ties to the lowest
+    cluster, zero-norm centroids never win; member means summed in
+    hash order; empty clusters carried forward). Same arithmetic in
+    the same order, so the centroids must be EQUAL, not close."""
+    import math
+
+    import numpy as np
+
+    from formula1_data_pipeline_spark.operators.similarity import (
+        train_ivf_centroids,
+    )
+    from formula1_data_pipeline_spark.session import local_frame
+
+    # double (not float) coordinates, so sums round and their order
+    # shows in the result
+    rng = np.random.default_rng(5)
+    centers = rng.normal(size=(5, 16))
+    pts = centers[rng.integers(0, 5, size=300)] \
+        + rng.normal(scale=0.8, size=(300, 16))
+    vecs = {i: [float(x) for x in p] for i, p in enumerate(pts)}
+    emb = local_frame(spark, list(vecs.items()),
+                      "vec_id long, embedding array<double>")
+    order = [vecs[i] for i in _hash_rank(vecs)]
+    k, n_iter = 6, 4
+    cent = {c: list(v) for c, v in enumerate(order[:k])}
+    for _ in range(n_iter):
+        norms = {c: math.sqrt(sum(x * x for x in v))
+                 for c, v in cent.items()}
+        members = {c: [] for c in cent}
+        for v in order:
+            best, best_s = None, None
+            for c in sorted(cent):
+                s = -math.inf
+                if norms[c] != 0.0:
+                    acc = 0.0
+                    for x, y in zip(v, cent[c]):
+                        acc += x * y
+                    s = acc / norms[c]
+                if best is None or s > best_s:
+                    best, best_s = c, s
+            members[best].append(v)
+        for c, vs in members.items():
+            if vs:
+                cent[c] = [sum(col) / len(vs) for col in zip(*vs)]
+
+    got = train_ivf_centroids(emb, n_centroids=k, n_iter=n_iter)
+    assert {(r["cluster"], r["d"]): r["coef"] for r in got.collect()} \
+        == {(c, d): x for c, v in cent.items() for d, x in enumerate(v)}
+
+
 def test_semantic_dedup_accepts_pretrained_quantizer(spark):
     """Round 8: semantic_dedup(centroid_coefs=...) must route the
     assignment through the supplied quantizer. Passing the SAME
